@@ -179,9 +179,8 @@ def shingle_jaccard_pairs(
 
 
 def _mh_coefs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
-    """The (a_i, b_i) affine coefficients — ONE definition shared by
-    the exploded-aggregate and array-expression signature forms, so
-    the two can never drift apart."""
+    """The (a_i, b_i) affine coefficients of the K minhash functions,
+    drawn from a seeded RNG so every signer of one seed agrees."""
     import random
 
     rng = random.Random(seed)
@@ -197,63 +196,14 @@ def minhash_signature(
     """K minhashes per doc from exploded shingles: h_i = min over shingles
     of (a_i * x + b_i mod p), x = xxhash64(shingle) folded into [0, p).
     One groupBy with K min-aggregates — a single shuffle on doc id.
-    Kept as the semantic reference; the production paths use
-    minhash_signature_arrays (bit-identical, shuffle-free) below."""
+    Every production path signs with this form (see the r14 A/B notes
+    at the call sites)."""
     x = F.pmod(F.xxhash64(F.col("shingle")), F.lit(_MH_PRIME))
     aggs = [
         F.min(F.pmod(F.lit(a) * x + F.lit(b), F.lit(_MH_PRIME))).alias(f"mh_{i}")
         for i, (a, b) in enumerate(_mh_coefs(num_hashes, seed))
     ]
     return ex_shingles.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signature_arrays(
-    sets: DataFrame,
-    id_col: str,
-    num_hashes: int = 32,
-    seed: int = 42,
-    shingles_col: str = "shingles",
-) -> DataFrame:
-    """minhash_signature computed as PURE ARRAY EXPRESSIONS over the
-    per-doc shingle arrays shingle_sets already materializes — no
-    explode, no groupBy, NO SHUFFLE (r14, guide §2.4): mh_i(doc) =
-    array_min(transform(xs, x -> pmod(a_i*x + b_i, p))) with
-    xs = transform(shingles, s -> pmod(xxhash64(s), p)), bit-identical
-    to the exploded aggregate (same shared coefficients, same int64
-    arithmetic over the same distinct shingles; parity pinned by
-    test_minhash_array_form_matches_exploded). The raw hash fold xs is
-    materialized as its own projected column — Catalyst does not CSE
-    inside lambdas, so folding it into each of the K array_min
-    transforms would hash every shingle K times (the word_shingles
-    lesson). Removing the shuffle also removes the aggregation
-    barrier: a downstream lazy localCheckpoint on the signatures stays
-    genuinely lazy (a shuffle-bearing plan materializes AT CALL under
-    AQE, addendum 68) — the store probes lose their one unconditional
-    serial driver job each."""
-    xs = F.transform(
-        F.col(shingles_col),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-    )
-    xed = sets.select(F.col(id_col), xs.alias("__xs"))
-
-    def _affine_min(a: int, b: int) -> Column:
-        # closure factory, not lambda defaults: PySpark derives the
-        # higher-order function's arity from the lambda's parameter
-        # count, so `lambda x, a=a, b=b` would declare a 3-arg HOF
-        return F.array_min(
-            F.transform(
-                F.col("__xs"),
-                lambda x: F.pmod(
-                    F.lit(a) * x + F.lit(b), F.lit(_MH_PRIME)
-                ),
-            )
-        )
-
-    mh = [
-        _affine_min(a, b).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_mh_coefs(num_hashes, seed))
-    ]
-    return xed.select(F.col(id_col), *mh)
 
 
 def cap_hot_buckets(
@@ -328,8 +278,9 @@ def minhash_lsh_pairs(
     O(m^2) candidate pairs per band it floods."""
     rows = _band_rows(num_hashes, bands)
     sets = shingle_sets(df, id_col, text_col, n)
-    # exploded+aggregate signatures ON PURPOSE (r14 A/B): the
-    # array-expression form (minhash_signature_arrays) was 1.6x SLOWER
+    # exploded+aggregate signatures ON PURPOSE (r14 A/B, negative —
+    # the array form was built, measured and deleted): a map-only
+    # array-expression form (array_min over transform) was 1.6x SLOWER
     # here — higher-order array functions are CodegenFallback
     # (interpreted per element), and with no exchange under the banded
     # self-join both sides re-run the whole map-only chain, so the
@@ -553,10 +504,9 @@ def incremental_minhash_dedup(
         # batch — fail loudly instead (same guard as the embedding twin)
         raise ValueError("state_mode must be 'full' or 'delta'")
     rows = _band_rows(num_hashes, bands)
-    # exploded+aggregate signatures, like minhash_lsh_pairs (r14 A/B:
-    # the interpreted array form lost to codegen on the self-join
-    # shapes; the array form survives only inside the store probe,
-    # where the signature frame is checkpointed and computed once)
+    # exploded+aggregate signatures, like minhash_lsh_pairs (r14 A/B,
+    # negative: the interpreted array form was 1.3-1.6x slower than
+    # the codegen'd aggregate on every probe shape, and was deleted)
     ex = shingle_sets(new_docs, id_col, text_col, n).select(
         F.col(id_col), F.explode("shingles").alias("shingle")
     )

@@ -1,51 +1,61 @@
-"""Band-bucketed MinHash signature store for incremental near-dup.
+"""Bucketed append stores for incremental near-dup: one core, two
+signers.
 
-The flat store (streaming/sinks.py `_append_parquet` on one directory)
-re-reads and RE-BANDS every signature row per batch: BASELINE addendum
-56 measured that probe as the delta path's worst scaler (8.6x per 10x
-of corpus — 45.4 s at the 500k decade), and addendum 57's slim banding
-only cut the shuffle volume, not the O(corpus) read + re-band.
+A flat state directory (one parquet dir of signature rows) re-reads
+and RE-BANDS every row per batch: BASELINE addendum 56 measured that
+probe as the delta path's worst scaler (8.6x per 10x of corpus — 45.4 s
+at the 500k decade), and addendum 57's slim banding only cut the
+shuffle volume, not the O(corpus) read + re-band.
 
-This store persists TWO pruned layouts under one root:
+`BucketedAppendStore` persists TWO pruned layouts under one root:
 
-  <root>/banded/band=B/bpfx=NN/app-*.parquet   (id, bucket)
-  <root>/sigs/pfx=NN/app-*.parquet             (id, mh_0..mh_{K-1})
-  <root>/_meta.json                            structural params
+  <root>/<bucket dir>/<group>=G/<bucket prefix>=NN/app-*.parquet
+        (id, bucket)          one row per (id, group) — slim
+  <root>/<row dir>/pfx=NN/app-*.parquet
+        (id, payload...)      one row per id — the verify payload
+  <root>/_meta.json           structural params + prefix moduli
 
-- `banded` holds the LSH band buckets ONCE (computed at commit time,
-  never re-derived from the mh columns), hive-partitioned by band and
-  a bucket-hash prefix: a batch's probe lists the (band, bpfx) dirs
-  its own band buckets hash into and opens ONLY those — for a small
-  batch (the streaming steady state, and any batch at the 100 TB
-  corpus/batch ratio) most of the store is never listed, and even a
-  bucket-saturating batch reads 3 slim columns instead of the K+1
-  signature columns. The probe side of the candidate join broadcasts
-  the batch (bounded: 8 x batch rows x 3 longs), so the store side is
-  a pruned SCAN, never a shuffle.
-- `sigs` holds the K-column signatures for the verify stage and the
-  replay anti-join, partitioned by an id-hash prefix so both reads
-  prune to the prefixes of the ids actually being looked up.
+- The BUCKET layout holds the LSH buckets ONCE (computed at commit
+  time, never re-derived from the payload), hive-partitioned by group
+  (band / hash table) and a bucket-value prefix: a batch's probe lists
+  the (group, prefix) dirs its own buckets hash into and opens ONLY
+  those — for a small batch (the streaming steady state, and any batch
+  at the 100 TB corpus/batch ratio) most of the store is never listed,
+  and even a bucket-saturating batch reads 3 slim columns instead of
+  the payload. The probe side of the candidate join is the batch
+  (bounded), so the store side is a pruned SCAN, never a shuffle.
+- The ROW layout holds the payload for the verify stage and the replay
+  anti-join, partitioned by an id-hash prefix so both reads prune to
+  the prefixes of the ids actually being looked up.
+
+`BandedSignatureStore` (MinHash bands over text, below) and
+`operators/vec_store.VecIndexStore` (hyperplane signatures over
+embeddings) are thin subclasses: each supplies how a batch is signed,
+the rows its bucket layout stores and probes with, its payload columns
+and its verify score. Everything else — heal-on-open, the meta guard,
+pruned reads, the probe skeleton, the staged commit and compaction —
+is this one core.
 
 Append discipline is the sinks' move-files-in contract (O(batch),
-prior files never rewritten). Crash windows converge exactly like the
-flat store: fresh rows are re-derived by the keys-only anti-join
-against `sigs`, so a partial append is healed by the replay. commit()
-moves `banded` files BEFORE `sigs` files — the one fatal order is a
-signature landing without its band rows (the doc would never be
-probed again); banded-without-sigs merely re-appends duplicate band
-rows on replay, which the candidate `distinct()` absorbs.
+prior files never rewritten). Crash windows converge on replay: fresh
+rows are re-derived by the keys-only anti-join against the ROW layout,
+so a partial append is healed by re-committing the batch. commit()
+moves bucket files BEFORE row files — the one fatal order is a row
+landing without its bucket rows (the id would never be probed again);
+buckets-without-row merely re-appends duplicate bucket rows on replay,
+which the candidate `distinct()` absorbs.
 
-Banding parameters (num_hashes, bands, shingle n) are stamped into
+Structural params (banding / signer identity) are stamped into
 `_meta.json` and validated on open — the same layout-version
 discipline as refresh_shards' hash stamp: state built under different
-banding must not be probed incrementally. The prefix MODULI are pure
+signing must not be probed incrementally. The prefix MODULI are pure
 layout, not structure (r12): handles adopt them from the store (root
 meta, overridden by each layout dir's own `_layout.json`), and only
 compact() may change them — it rewrites every file anyway, and the
 commit-time auto-compaction passes auto_grow=True so the partitioning
 doubles as the store outgrows its per-dir byte budget.
 
-Semantics are IDENTICAL to operators/dedup.py
+BandedSignatureStore semantics are IDENTICAL to operators/dedup.py
 incremental_minhash_dedup (same shingles, signatures, banding structs,
 estimator, threshold rule) — pinned by the store-vs-flat parity test.
 """
@@ -58,17 +68,16 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _META = "_meta.json"
 _LAYOUT = "_layout.json"
-_LAYOUT_VERSION = "banded-v1"
 
 
 def _read_layout(base: str) -> dict | None:
-    """A layout dir's own modulus record (absent on pre-migration
-    stores: their modulus comes from the root meta)."""
+    """A layout dir's own modulus record (absent before the dir's
+    first commit: the modulus then comes from the root meta)."""
     lp = os.path.join(base, _LAYOUT)
     if not os.path.exists(lp):
         return None
@@ -87,30 +96,38 @@ def _write_layout(base: str, layout: dict) -> None:
     os.rename(tmp, os.path.join(base, _LAYOUT))
 
 
-class BandedSignatureStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        n: int = 3,
-        num_hashes: int = 32,
-        bands: int = 8,
-        sig_pfx: int = 32,
-        bucket_pfx: int = 32,
-    ):
+class BucketedAppendStore:
+    """The shared two-layout append store. Subclasses declare the
+    layout names and structural params as class attributes, set their
+    params and moduli, then call `__init__` here; they implement
+    `_bucket_rows` and `_n_groups` (and `_payload_rows` when the
+    payload is not a plain projection), and their `probe` signs a
+    batch and hands it to `_probe`."""
+
+    _LAYOUT_VERSION: str
+    # meta keys after "layout", in on-disk order; every one that is
+    # not a modulus is structural
+    _PARAMS: tuple[str, ...]
+    # bucket layout <root>/<_BUCKET_DIR>/<_GROUP>=G/<_BUCKET_PFX>=NN,
+    # prefix = <_BUCKET> mod <_BUCKET_MOD>
+    _BUCKET_DIR: str
+    _GROUP: str
+    _BUCKET: str
+    _BUCKET_PFX: str
+    _BUCKET_MOD: str
+    # row layout <root>/<_ROW_DIR>/pfx=NN, prefix = xxhash64(id) mod
+    # <_ROW_MOD>
+    _ROW_DIR: str
+    _ROW_MOD: str
+
+    def __init__(self, spark: SparkSession, root: str, key: str,
+                 payload: list[str]):
         self.spark = spark
         self.root = root
-        self.id_col = id_col
-        self.text_col = text_col
-        self.n = n
-        self.num_hashes = num_hashes
-        self.bands = bands
-        self.sig_pfx = sig_pfx
-        self.bucket_pfx = bucket_pfx
-        self._sigs = os.path.join(root, "sigs")
-        self._banded = os.path.join(root, "banded")
+        self._key = key
+        self._payload = payload
+        self._bdir = os.path.join(root, self._BUCKET_DIR)
+        self._rdir = os.path.join(root, self._ROW_DIR)
         self._check_meta()
         # heal staging dirs left by a crashed commit (replay re-stages)
         for d in glob.glob(os.path.join(root, ".stage-*")):
@@ -120,7 +137,7 @@ class BandedSignatureStore:
         # leaves the live dir MISSING with the aside holding the only
         # copy. Restore the aside when base is gone; staged compacts
         # are garbage either way (a rerun re-stages).
-        for base in (self._banded, self._sigs):
+        for base in (self._bdir, self._rdir):
             asides = sorted(glob.glob(base + ".old-*"))
             if not os.path.isdir(base) and asides:
                 os.rename(asides.pop(0), base)
@@ -131,59 +148,73 @@ class BandedSignatureStore:
         # per-layout moduli win over everything (see _check_meta):
         # each layout dir carries the modulus its hive values were
         # computed under, so a crash between compact()'s two layout
-        # swaps (banded migrated, sigs not yet) still reads BOTH
-        # layouts under their true moduli. Read AFTER healing — the
-        # layout file rides inside the dir the heal may restore.
-        lb = _read_layout(self._banded)
-        if lb is not None:
-            self.bucket_pfx = int(lb["bucket_pfx"])
-        ls = _read_layout(self._sigs)
-        if ls is not None:
-            self.sig_pfx = int(ls["sig_pfx"])
+        # swaps (bucket layout migrated, rows not yet) still reads
+        # BOTH layouts under their true moduli. Read AFTER healing —
+        # the layout file rides inside the dir the heal may restore.
+        for base, mod in ((self._bdir, self._BUCKET_MOD),
+                          (self._rdir, self._ROW_MOD)):
+            lay = _read_layout(base)
+            if lay is not None:
+                setattr(self, mod, int(lay[mod]))
+
+    # ---------------------------------------------------------- hooks
+    def _bucket_rows(self, signed: DataFrame) -> DataFrame:
+        """(id, group, bucket) rows the bucket layout stores for a
+        signed frame."""
+        raise NotImplementedError
+
+    def _payload_rows(self, signed: DataFrame) -> DataFrame:
+        """(id, payload...) rows — one per id — the row layout stores
+        for a signed frame."""
+        return signed.select(self._key, *self._payload)
+
+    def _n_groups(self) -> int:
+        """Group dirs per bucket prefix (bands / hash tables)."""
+        raise NotImplementedError
 
     # ---------------------------------------------------------- meta
     def _meta_dict(self) -> dict:
         return {
-            "layout": _LAYOUT_VERSION,
-            "n": self.n,
-            "num_hashes": self.num_hashes,
-            "bands": self.bands,
-            "sig_pfx": self.sig_pfx,
-            "bucket_pfx": self.bucket_pfx,
+            "layout": self._LAYOUT_VERSION,
+            **{k: getattr(self, k) for k in self._PARAMS},
         }
-
-    # params whose mismatch means the persisted state is semantically
-    # incompatible with this handle: probing across them silently
-    # misses duplicates, so they raise. The prefix MODULI are not in
-    # this set — they are pure layout, adopted from the store (only
-    # compact() may change them, rewriting every file under the new
-    # scheme), so a default-constructed handle keeps working on a
-    # store that has grown its partitioning.
-    _STRUCTURAL = ("layout", "n", "num_hashes", "bands")
 
     def _check_meta(self) -> None:
         mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                have = json.load(fh)
-            mine = self._meta_dict()
-            if any(have.get(k) != mine[k] for k in self._STRUCTURAL):
-                raise ValueError(
-                    "signature store %s was built with %r, opened "
-                    "with %r — banding params are structural; rebuild "
-                    "the store instead of probing across them"
-                    % (self.root, have, mine)
-                )
-            # adopt the store's layout moduli (per-layout _layout.json
-            # files override these again in __init__)
-            if "sig_pfx" in have:
-                self.sig_pfx = int(have["sig_pfx"])
-            if "bucket_pfx" in have:
-                self.bucket_pfx = int(have["bucket_pfx"])
+        if not os.path.exists(mp):
+            return
+        with open(mp) as fh:
+            have = json.load(fh)
+        mine = self._meta_dict()
+        # params whose mismatch means the persisted state is
+        # semantically incompatible with this handle: probing across
+        # them silently misses duplicates, so they raise. The prefix
+        # MODULI are not in this set — they are pure layout, adopted
+        # from the store (only compact() may change them, rewriting
+        # every file under the new scheme), so a default-constructed
+        # handle keeps working on a store that has grown its
+        # partitioning.
+        moduli = (self._BUCKET_MOD, self._ROW_MOD)
+        if any(have.get(k) != v for k, v in mine.items()
+               if k not in moduli):
+            raise ValueError(
+                "%s %s was built with %r, opened with %r — its signing "
+                "params are structural; rebuild the store instead of "
+                "probing across them"
+                % (type(self).__name__, self.root, have, mine)
+            )
+        # adopt the store's layout moduli (per-layout _layout.json
+        # files override these again in __init__)
+        for mod in moduli:
+            if mod in have:
+                setattr(self, mod, int(have[mod]))
 
-    def _write_meta(self) -> None:
+    def _write_meta(self, replace: bool = False) -> None:
+        """Atomic meta write. Only compact() passes replace=True: it
+        rewrote every file, so the new moduli describe the store
+        truthfully."""
         mp = os.path.join(self.root, _META)
-        if os.path.exists(mp):
+        if os.path.exists(mp) and not replace:
             return
         os.makedirs(self.root, exist_ok=True)
         tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
@@ -191,33 +222,23 @@ class BandedSignatureStore:
             json.dump(self._meta_dict(), fh)
         os.rename(tmp, mp)
 
-    def _rewrite_meta(self) -> None:
-        """Atomic in-place meta replace — ONLY compact() may call this
-        (a migration rewrote every file, so the new moduli describe
-        the store truthfully)."""
-        mp = os.path.join(self.root, _META)
-        tmp = mp + "." + uuid.uuid4().hex[:8] + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._meta_dict(), fh)
-        os.rename(tmp, mp)
-
     # -------------------------------------------------------- layout
     def exists(self) -> bool:
-        return _dir_has_parquet(self._sigs)
+        return _dir_has_parquet(self._rdir)
 
-    def _pfx_expr(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.sig_pfx))
+    def _pfx_expr(self, col: Column) -> Column:
+        return F.pmod(F.xxhash64(col), F.lit(getattr(self, self._ROW_MOD)))
 
-    def _sig_dirs(self, prefixes: list[int] | None) -> list[str]:
-        return _partition_dirs(self._sigs, {"pfx": prefixes})
+    def _row_dirs(self, prefixes: list[int] | None) -> list[str]:
+        return _partition_dirs(self._rdir, {"pfx": prefixes})
 
-    def _banded_dirs(self, pairs: set[tuple[int, int]] | None) -> list[str]:
+    def _bucket_dirs(self, pairs: set[tuple[int, int]] | None) -> list[str]:
         dirs = []
-        for band_dir in sorted(glob.glob(os.path.join(self._banded, "band=*"))):
-            band = int(os.path.basename(band_dir).split("=", 1)[1])
-            for pd in sorted(glob.glob(os.path.join(band_dir, "bpfx=*"))):
-                bpfx = int(os.path.basename(pd).split("=", 1)[1])
-                if pairs is None or (band, bpfx) in pairs:
+        for gdir in sorted(glob.glob(os.path.join(self._bdir, f"{self._GROUP}=*"))):
+            g = int(os.path.basename(gdir).split("=", 1)[1])
+            for pd in sorted(glob.glob(os.path.join(gdir, f"{self._BUCKET_PFX}=*"))):
+                bp = int(os.path.basename(pd).split("=", 1)[1])
+                if pairs is None or (g, bp) in pairs:
                     dirs.append(pd)
         return dirs
 
@@ -237,12 +258,13 @@ class BandedSignatureStore:
     # --------------------------------------------------------- probe
     def seen_ids(self, ids: DataFrame) -> DataFrame:
         """Store ids restricted to the prefixes of `ids` — the pruned
-        form of `existing.select(id_col)` for anti-joins. Any store id
+        form of `existing.select(id)` for anti-joins. Any store id
         equal to a probe id shares its prefix, so the restriction is
         exact."""
+        key = self._key
         if not self.exists():
-            return ids.select(self.id_col).limit(0)
-        if self.sig_pfx == 1:
+            return ids.select(key).limit(0)
+        if getattr(self, self._ROW_MOD) == 1:
             # one prefix dir: the collect could only ever return {0} —
             # skip the extra driver job and read the single dir
             pfx = None
@@ -250,12 +272,411 @@ class BandedSignatureStore:
             pfx = sorted(
                 r[0]
                 for r in ids.select(
-                    self._pfx_expr(F.col(self.id_col)).alias("p")
+                    self._pfx_expr(F.col(key)).alias("p")
                 ).distinct().collect()
             )
         return self._read(
-            self._sigs, self._sig_dirs(pfx), ids.select(self.id_col),
-            [self.id_col],
+            self._rdir, self._row_dirs(pfx), ids.select(key), [key]
+        )
+
+    def _probe(
+        self,
+        signed: DataFrame,
+        probe_rows: DataFrame,
+        score,
+        score_col: str,
+        threshold: float,
+        assume_fresh: bool,
+        max_bucket_size: int | None,
+        stats: dict | None,
+    ) -> tuple[DataFrame, DataFrame]:
+        """(fresh, pairs) for a signed batch against the store.
+        `signed` is the batch's checkpointed signed frame, `probe_rows`
+        its (id, group, bucket) probe rows, and `score(a, b)` builds
+        the verify score from the two sides' payload columns (`a(c)` /
+        `b(c)` name payload column `c` of id_a / id_b); pairs scoring
+        >= threshold are returned as (id_a < id_b, score_col)."""
+        key, grp, bkt = self._key, self._GROUP, self._BUCKET
+        exists = self.exists()
+        if assume_fresh or not exists:
+            fresh = signed
+        else:
+            # no broadcast hint: the seen side is pruned-store-sized
+            # (batch-sized only when prefixes are selective) — AQE
+            # picks the strategy from the pruned size at runtime
+            fresh = signed.join(
+                self.seen_ids(signed.select(key)), key, "left_anti"
+            ).localCheckpoint(eager=False)
+
+        # the batch's buckets name the ONLY store partitions a
+        # candidate can live in: the bucket prefix is a pure function
+        # of the bucket and the join requires bucket equality. The
+        # touched-dirs collect is skipped when it cannot prune
+        # anything: on an EMPTY store there are no dirs, and at bucket
+        # modulus 1 every id emits every group (one prefix each), so
+        # any non-empty batch touches every dir and the collect is a
+        # constant (an empty batch then reads dirs the bucket-equality
+        # join immediately drops — harmless, and only reachable in the
+        # modulus-1 graded mini-config). Skipping it also lets
+        # probe_rows stay lazy: its only other consumer is the
+        # candidate join, and under AQE a localCheckpoint materializes
+        # the plan at call time (one serial driver job saved per
+        # probe).
+        bmod = getattr(self, self._BUCKET_MOD)
+        if exists and bmod > 1:
+            probe_rows = probe_rows.localCheckpoint(eager=False)
+            touched = {
+                (r[0], r[1])
+                for r in probe_rows.select(
+                    grp, F.pmod(F.col(bkt), F.lit(bmod))
+                ).distinct().collect()
+            }
+        else:
+            touched = None if exists else set()
+        sel = self._bucket_dirs(touched)
+        if stats is not None:
+            alls = self._bucket_dirs(None)
+            name = self._BUCKET_DIR
+            stats[f"{name}_dirs_opened"] = len(
+                [d for d in sel if _dir_has_parquet(d)]
+            )
+            stats[f"{name}_dirs_total"] = len(alls)
+            stats[f"{name}_files_opened"] = sum(_n_parquet(d) for d in sel)
+            stats[f"{name}_files_total"] = sum(_n_parquet(d) for d in alls)
+        store_rows = self._read(self._bdir, sel, probe_rows, [key, grp, bkt])
+        # store rows outside the touched buckets can never satisfy the
+        # bucket-equality join — the pruned union is exact
+        all_rows = store_rows.unionByName(self._bucket_rows(fresh))
+        if max_bucket_size is not None:
+            # bucket population is judged on the CORPUS view (store
+            # rows in the touched partitions + this batch's fresh
+            # rows): the flood lives there. Keep the cap SMALLEST ids
+            # per bucket — the canonical representatives under the
+            # keep-lowest-id survivor rule (see the subclass probe
+            # docstrings).
+            if stats is not None:
+                stats["capped_buckets"] = (
+                    all_rows.groupBy(grp, bkt)
+                    .agg(F.count(F.lit(1)).alias("__bsz"))
+                    .filter(F.col("__bsz") > max_bucket_size)
+                    .count()
+                )
+            w = Window.partitionBy(grp, bkt).orderBy(key)
+            all_rows = (
+                all_rows.withColumn("__rk", F.row_number().over(w))
+                .filter(F.col("__rk") <= max_bucket_size)
+                .drop("__rk")
+            )
+        # no broadcast hint on the batch side: for a micro-batch AQE
+        # broadcasts it anyway (probe_rows is checkpointed, so its
+        # size is exact at runtime), while a bootstrap probe of a
+        # whole corpus through an empty store would otherwise
+        # driver-collect millions of bucket rows into a forced
+        # broadcast (the r11 500k rebuild measured minutes for it)
+        a = probe_rows.alias("a")
+        b = all_rows.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col(f"a.{grp}") == F.col(f"b.{grp}"))
+                & (F.col(f"a.{bkt}") == F.col(f"b.{bkt}"))
+                & (F.col(f"a.{key}") != F.col(f"b.{key}")),
+            )
+            .select(
+                F.least(F.col(f"a.{key}"), F.col(f"b.{key}")).alias("id_a"),
+                F.greatest(F.col(f"a.{key}"), F.col(f"b.{key}")).alias("id_b"),
+            )
+            .distinct()
+        )
+        # checkpoint cand ONLY when something reuses it across actions
+        # (the row-pruning collect below, or the stats counter). This
+        # is not an optimization nicety but load-bearing (r13): under
+        # AQE, even localCheckpoint(eager=False) materializes every
+        # shuffle stage of the plan AT CALL TIME (Dataset.toRdd builds
+        # the AQE query stages), so an unconditional checkpoint ran
+        # the full candidate join + distinct inside probe() — on a
+        # bootstrap probe of a corpus containing a template flood
+        # that is the quadratic wall, paid even when the caller never
+        # consumes the pairs (commit-only ingest).
+        # at row modulus 1 the prefix collect is a constant ({0}) —
+        # skip it, which ALSO keeps cand fully lazy on stats-less
+        # probes: the candidate join then first runs inside the
+        # caller's own action instead of as a serial job here (the
+        # AQE-eager-checkpoint finding, addendum 68)
+        prune_rows = exists and getattr(self, self._ROW_MOD) > 1
+        if prune_rows or stats is not None:
+            cand = cand.localCheckpoint(eager=False)
+        if stats is not None:
+            stats["cand_pairs"] = cand.count()
+        cols = [key, *self._payload]
+        if exists:
+            if prune_rows:
+                cand_pfx = sorted(
+                    r[0]
+                    for r in cand.select(
+                        F.explode(
+                            F.array(
+                                self._pfx_expr(F.col("id_a")),
+                                self._pfx_expr(F.col("id_b")),
+                            )
+                        ).alias("p")
+                    ).distinct().collect()
+                )
+            else:
+                cand_pfx = None
+            store_lookup = self._read(
+                self._rdir, self._row_dirs(cand_pfx), signed, cols
+            )
+        else:
+            # EMPTY store: the cand_pfx collect's only purpose is
+            # pruning the row read, and there is nothing to prune —
+            # but the collect would still MATERIALIZE the full
+            # candidate set eagerly. On a bootstrap probe whose
+            # caller never consumes the pairs (commit-only ingest of
+            # a corpus), that materialization is pure waste — and
+            # under a template flood it is the quadratic wall, paid
+            # for nothing (r13: a 20k-copy flood made the collect
+            # effectively unbounded). Keep the whole pairs plan lazy
+            # instead; callers that do consume pairs pay the
+            # candidate volume exactly once.
+            store_lookup = signed.select(*cols).limit(0)
+        lookup = store_lookup.unionByName(self._payload_rows(fresh))
+        sa = lookup.select(
+            F.col(key).alias("id_a"),
+            *[F.col(c).alias(f"__a_{c}") for c in self._payload],
+        )
+        sb = lookup.select(
+            F.col(key).alias("id_b"),
+            *[F.col(c).alias(f"__b_{c}") for c in self._payload],
+        )
+        s = score(lambda c: F.col(f"__a_{c}"), lambda c: F.col(f"__b_{c}"))
+        pairs = (
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select("id_a", "id_b", s.alias(score_col))
+            .filter(F.col(score_col) >= threshold)
+        )
+        return fresh, pairs
+
+    # -------------------------------------------------------- commit
+    # per-partition-dir file count that triggers auto-compaction at
+    # the end of a commit: every commit adds ~1 file per touched dir,
+    # so an unmaintained long stream accumulates one file per batch
+    # per dir and the probe's pruned reads degrade into a
+    # small-files listing problem. 64 bounds a dir's files while
+    # keeping compaction amortized (one fold per 64 batches).
+    COMPACT_THRESHOLD = 64
+
+    def commit(self, fresh: DataFrame, batch_id: int = 0) -> None:
+        """Append a batch's fresh signed rows (the probe's `fresh`):
+        bucket rows FIRST, then payload rows (see module docstring for
+        the crash order). Each partition dir only ever GAINS files —
+        O(batch) writes — and when the FULLEST row-layout dir crosses
+        COMPACT_THRESHOLD files the whole store folds to one file per
+        dir (stage + swap, crash leaves old or new set, both
+        complete). A failed stage write removes the staging dir and
+        raises every write's error."""
+        self._write_meta()
+        grp, bpfx = self._GROUP, self._BUCKET_PFX
+        buckets = self._bucket_rows(fresh).withColumn(
+            bpfx,
+            F.pmod(F.col(self._BUCKET), F.lit(getattr(self, self._BUCKET_MOD))),
+        )
+        rows = self._payload_rows(fresh).withColumn(
+            "pfx", self._pfx_expr(F.col(self._key))
+        )
+        stage = os.path.join(self.root, ".stage-" + uuid.uuid4().hex)
+        b_stage = os.path.join(stage, self._BUCKET_DIR)
+        r_stage = os.path.join(stage, self._ROW_DIR)
+        try:
+            # one file per partition dir per commit: repartition by
+            # the partition columns so a batch adds one file per
+            # touched dir, not tasks x dirs. The two layouts stage
+            # CONCURRENTLY (guide §2.6 — overlap independent jobs):
+            # the writes share only the checkpointed fresh frame
+            # (concurrent first-materialization of one local
+            # checkpoint is a synchronized RDDCheckpointData path),
+            # and the crash-order contract lives in the MOVES below,
+            # which stay strictly buckets-then-rows. For a micro-batch
+            # each write is mostly fixed job cost, so overlapping them
+            # cuts the commit wall by close to the smaller write.
+            _write_concurrently(self.spark, [
+                lambda: buckets.repartition(grp, bpfx).write.partitionBy(
+                    grp, bpfx).mode("overwrite").parquet(b_stage),
+                lambda: rows.repartition("pfx").write.partitionBy(
+                    "pfx").mode("overwrite").parquet(r_stage),
+            ])
+            tok = f"{batch_id}-{uuid.uuid4().hex}"
+            if _move_partition_files(b_stage, self._bdir, tok) == 0:
+                # empty batch: nothing to land (a replayed batch's
+                # fresh set is empty — no empty part-files
+                # accumulating)
+                return
+            _move_partition_files(r_stage, self._rdir, tok)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        # stamp each live layout dir with its modulus (first commit
+        # creates the dirs; later commits are a no-op stat)
+        for base, mod in ((self._bdir, self._BUCKET_MOD),
+                          (self._rdir, self._ROW_MOD)):
+            if _read_layout(base) is None:
+                _write_layout(base, {mod: getattr(self, mod)})
+        # trigger on the FULLEST dir, not the lexicographically first:
+        # skewed/tiny batches don't touch dirs symmetrically, so a
+        # single sampled dir can lag the real maximum by a multiple
+        # (the walk is bounded — post-compaction every dir holds one
+        # file, so this counts at most dirs x threshold files).
+        # auto_grow: the fold is also the point where the store checks
+        # whether its partition dirs have outgrown the probe-read
+        # budget and doubles the prefix moduli if so.
+        dirs = self._row_dirs(None)
+        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
+            self.compact(auto_grow=True)
+
+    # --------------------------------------------------- maintenance
+    # auto-grow target: compact(auto_grow=True) doubles a layout's
+    # prefix modulus until each partition dir holds at most this many
+    # bytes — the invariant that keeps a probe's read volume
+    # batch-proportional as the corpus grows (each opened dir is
+    # 1/(groups*bucket modulus) of the store; a fixed modulus makes
+    # that slice grow linearly with the corpus, addendum 59's honest
+    # ceiling).
+    AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
+    MAX_PFX = 4096
+
+    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
+        total = 0
+        for r, _dirs, files in os.walk(base):
+            for f in files:
+                if f.endswith(".parquet"):
+                    try:
+                        total += os.path.getsize(os.path.join(r, f))
+                    except OSError:
+                        pass
+        new = cur
+        while (
+            new < self.MAX_PFX
+            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
+        ):
+            new *= 2
+        return new
+
+    def _compact(self, to_bucket: int | None, to_row: int | None,
+                 auto_grow: bool) -> None:
+        """Fold each partition dir's accumulated per-batch files into
+        one file (stage + swap per layout; a crash leaves either the
+        old or the new file set, both complete).
+
+        `to_bucket` / `to_row` MIGRATE the store to new prefix moduli
+        in the same rewrite — compact already touches every file, so
+        it is the one legal point where the partitioning may change
+        (r11 VERDICT item 5: a fixed bucket modulus caps pruning as
+        the corpus grows). `auto_grow=True` picks the moduli instead:
+        doubled until each partition dir is back under
+        AUTO_GROW_DIR_BYTES — the commit-time auto-compaction passes
+        this, so a long-running store re-partitions itself as it
+        grows. Crash-safe: each staged layout dir carries its own
+        `_layout.json` (swapped atomically with the dir), so dying
+        between the two layout swaps leaves the bucket layout at the
+        new modulus and the rows at the old — and the next open reads
+        each under its true modulus. The root _meta.json is rewritten
+        LAST (fresh handles adopt it; per-layout files win until
+        then)."""
+        old_b = getattr(self, self._BUCKET_MOD)
+        old_r = getattr(self, self._ROW_MOD)
+        new_b = to_bucket or old_b
+        new_r = to_row or old_r
+        if auto_grow:
+            if _dir_has_parquet(self._bdir):
+                new_b = max(
+                    new_b, self._grown_pfx(self._bdir, self._n_groups(), new_b)
+                )
+            if _dir_has_parquet(self._rdir):
+                new_r = max(new_r, self._grown_pfx(self._rdir, 1, new_r))
+        layouts = (
+            (self._bdir, [self._GROUP, self._BUCKET_PFX], self._BUCKET_MOD,
+             old_b, new_b, F.pmod(F.col(self._BUCKET), F.lit(new_b))),
+            (self._rdir, ["pfx"], self._ROW_MOD, old_r, new_r,
+             F.pmod(F.xxhash64(F.col(self._key)), F.lit(new_r))),
+        )
+        for base, pcols, mod, old, new, pfx in layouts:
+            if not _dir_has_parquet(base):
+                continue
+            df = self.spark.read.parquet(base)
+            if new != old:
+                df = df.drop(pcols[-1]).withColumn(pcols[-1], pfx)
+            stage = base + ".compact-" + uuid.uuid4().hex[:8]
+            df.repartition(*pcols).write.partitionBy(*pcols).mode(
+                "overwrite"
+            ).parquet(stage)
+            _write_layout(stage, {mod: new})
+            aside = base + ".old-" + uuid.uuid4().hex[:8]
+            os.rename(base, aside)
+            os.rename(stage, base)
+            shutil.rmtree(aside, ignore_errors=True)
+        setattr(self, self._BUCKET_MOD, new_b)
+        setattr(self, self._ROW_MOD, new_r)
+        self._write_meta(replace=True)
+
+
+class BandedSignatureStore(BucketedAppendStore):
+    """MinHash signatures over text:
+
+      <root>/banded/band=B/bpfx=NN/app-*.parquet   (id, bucket)
+      <root>/sigs/pfx=NN/app-*.parquet             (id, mh_0..mh_{K-1})
+
+    `banded` holds the LSH band buckets (8 x batch rows x 3 longs on
+    the probe side); `sigs` holds the K-column signatures verified by
+    matching fraction."""
+
+    _LAYOUT_VERSION = "banded-v1"
+    _PARAMS = ("n", "num_hashes", "bands", "sig_pfx", "bucket_pfx")
+    _BUCKET_DIR, _GROUP, _BUCKET = "banded", "band", "bucket"
+    _BUCKET_PFX, _BUCKET_MOD = "bpfx", "bucket_pfx"
+    _ROW_DIR, _ROW_MOD = "sigs", "sig_pfx"
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        n: int = 3,
+        num_hashes: int = 32,
+        bands: int = 8,
+        sig_pfx: int = 32,
+        bucket_pfx: int = 32,
+    ):
+        self.id_col = id_col
+        self.text_col = text_col
+        self.n = n
+        self.num_hashes = num_hashes
+        self.bands = bands
+        self.sig_pfx = sig_pfx
+        self.bucket_pfx = bucket_pfx
+        super().__init__(
+            spark, root, id_col, [f"mh_{i}" for i in range(num_hashes)]
+        )
+
+    def _n_groups(self) -> int:
+        return self.bands
+
+    def _bucket_rows(self, sig: DataFrame) -> DataFrame:
+        from data_engineering_pipeline_spark.operators.dedup import (
+            _band_rows,
+            _band_structs,
+        )
+
+        band_cols = _band_structs(
+            self.bands, _band_rows(self.num_hashes, self.bands)
+        )
+        return sig.select(
+            F.col(self.id_col),
+            F.explode(F.array(*band_cols)).alias("bb"),
+        ).select(
+            self.id_col,
+            F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
         )
 
     def probe(
@@ -302,17 +723,11 @@ class BandedSignatureStore:
         skipped. Costs one extra shuffle of the PRUNED slim scan (the
         per-bucket rank window) — paid only when the cap is on."""
         from data_engineering_pipeline_spark.operators.dedup import (
-            _band_rows,
-            _band_structs,
             minhash_signature,
             shingle_sets,
         )
 
         id_col = self.id_col
-        rows = _band_rows(self.num_hashes, self.bands)
-        band_cols = _band_structs(self.bands, rows)
-        mh_cols = [f"mh_{i}" for i in range(self.num_hashes)]
-
         if shingles is None:
             shingles = shingle_sets(new_docs, id_col, self.text_col, self.n)
         # checkpoint the batch signatures ONCE: sig feeds the fresh
@@ -321,352 +736,31 @@ class BandedSignatureStore:
         # re-runs the tokenize+shingle+minhash chain (and the caller's
         # whole new_docs lineage above it); the r11 500k probe
         # measured that recomputation as the dominant wall. The
-        # exploded+aggregate form ON PURPOSE (r14 A/B): the map-only
-        # array-expression form (minhash_signature_arrays) would keep
-        # this checkpoint lazy under AQE — no serial job here — but
-        # higher-order array functions are CodegenFallback
-        # (interpreted), and the interleaved probe-form A/B read the
-        # array variant 1.30x SLOWER on the corpus-sized graded
-        # batches (5.74/6.41 vs 4.67/4.66 s): the codegen'd aggregate
-        # beats the saved driver job.
+        # exploded+aggregate form ON PURPOSE (r14 A/B, negative): a
+        # map-only array-expression form would keep this checkpoint
+        # lazy under AQE — no serial job here — but higher-order
+        # array functions are CodegenFallback (interpreted per
+        # element), and the interleaved probe-form A/B read the array
+        # variant 1.30x SLOWER on the corpus-sized graded batches
+        # (5.74/6.41 vs 4.67/4.66 s): the codegen'd aggregate beats
+        # the saved driver job.
         ex = shingles.select(
             F.col(id_col), F.explode("shingles").alias("shingle")
         )
         sig = minhash_signature(ex, id_col, self.num_hashes).localCheckpoint(
             eager=False
         )
-        if assume_fresh or not self.exists():
-            fresh_sig = sig
-        else:
-            # no broadcast hint: the seen side is pruned-store-sized
-            # (batch-sized only when prefixes are selective) — AQE
-            # picks the strategy from the pruned size at runtime
-            fresh_sig = sig.join(
-                self.seen_ids(sig.select(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=False)
 
-        def banded(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col(id_col),
-                F.explode(F.array(*band_cols)).alias("bb"),
-            ).select(
-                id_col,
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
+        def est_jaccard(a, b) -> Column:
+            matches = F.lit(0)
+            for c in self._payload:
+                matches = matches + F.when(a(c) == b(c), 1).otherwise(0)
+            return matches / F.lit(self.num_hashes)
 
-        # the batch's band buckets name the ONLY store partitions a
-        # candidate can live in: bpfx is a pure function of bucket and
-        # the join requires bucket equality. The touched-dirs collect is
-        # skipped when it cannot prune anything: on an EMPTY store there
-        # are no dirs, and at bucket_pfx == 1 every doc emits every band
-        # (one bpfx each), so any non-empty batch touches every dir and
-        # the collect is a constant (an empty batch then reads dirs the
-        # bucket-equality join immediately drops — harmless, and only
-        # reachable in the modulus-1 graded mini-config). Skipping it
-        # also lets batch_banded stay lazy: its only other consumer is
-        # the candidate self-join, and under AQE a localCheckpoint
-        # materializes the plan at call time (one serial driver job
-        # saved per probe).
-        batch_banded = banded(sig)
-        if self.exists() and self.bucket_pfx > 1:
-            batch_banded = batch_banded.localCheckpoint(eager=False)
-            touched = {
-                (r["band"], r["bp"])
-                for r in batch_banded.select(
-                    "band",
-                    F.pmod(
-                        F.col("bucket"), F.lit(self.bucket_pfx)
-                    ).alias("bp"),
-                ).distinct().collect()
-            }
-        else:
-            touched = None if self.exists() else set()
-        sel = self._banded_dirs(touched)
-        if stats is not None:
-            allb = self._banded_dirs(None)
-            stats["banded_dirs_opened"] = len(
-                [d for d in sel if _dir_has_parquet(d)]
-            )
-            stats["banded_dirs_total"] = len(allb)
-            stats["banded_files_opened"] = sum(
-                _n_parquet(d) for d in sel
-            )
-            stats["banded_files_total"] = sum(
-                _n_parquet(d) for d in allb
-            )
-        store_banded = self._read(
-            self._banded, sel, batch_banded, [id_col, "band", "bucket"]
+        return self._probe(
+            sig, self._bucket_rows(sig), est_jaccard, "est_jaccard",
+            threshold, assume_fresh, max_bucket_size, stats,
         )
-        # store rows outside the touched buckets can never satisfy the
-        # bucket-equality join — the pruned union is exact
-        all_banded = store_banded.unionByName(banded(fresh_sig))
-        if max_bucket_size is not None:
-            # bucket population is judged on the CORPUS view (store
-            # rows in the touched partitions + this batch's fresh
-            # rows): the flood lives there. Keep the cap SMALLEST ids
-            # per bucket — the canonical representatives under the
-            # keep-lowest-id survivor rule (see docstring).
-            if stats is not None:
-                stats["capped_buckets"] = (
-                    all_banded.groupBy("band", "bucket")
-                    .agg(F.count(F.lit(1)).alias("__bsz"))
-                    .filter(F.col("__bsz") > max_bucket_size)
-                    .count()
-                )
-            w = Window.partitionBy("band", "bucket").orderBy(id_col)
-            all_banded = (
-                all_banded.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= max_bucket_size)
-                .drop("__rk")
-            )
-        # no broadcast hint on the batch side: for a micro-batch AQE
-        # broadcasts it anyway (batch_banded is checkpointed, so its
-        # size is exact at runtime), while a bootstrap probe of a
-        # whole corpus through an empty store would otherwise
-        # driver-collect millions of banded rows into a forced
-        # broadcast (the r11 500k rebuild measured minutes for it)
-        a = batch_banded.alias("a")
-        b = all_banded.alias("b")
-        cand = (
-            a
-            .join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
-            )
-            .distinct()
-        )
-        # checkpoint cand ONLY when something reuses it across actions
-        # (the sigs-pruning collect below, or the stats counter). This
-        # is not an optimization nicety but load-bearing (r13): under
-        # AQE, even localCheckpoint(eager=False) materializes every
-        # shuffle stage of the plan AT CALL TIME (Dataset.toRdd builds
-        # the AQE query stages), so an unconditional checkpoint ran
-        # the full candidate join + distinct inside probe() — on a
-        # bootstrap probe of a corpus containing a template flood
-        # that is the quadratic wall, paid even when the caller never
-        # consumes the pairs (commit-only ingest).
-        # at sig_pfx == 1 the prefix collect is a constant ({0}) — skip
-        # it, which ALSO keeps cand fully lazy on stats-less probes:
-        # the candidate join then first runs inside the caller's own
-        # action instead of as a serial job here (the AQE-eager-
-        # checkpoint finding, addendum 68)
-        prune_sigs = self.exists() and self.sig_pfx > 1
-        if prune_sigs or stats is not None:
-            cand = cand.localCheckpoint(eager=False)
-        if stats is not None:
-            stats["cand_pairs"] = cand.count()
-        if self.exists():
-            if prune_sigs:
-                cand_pfx = sorted(
-                    r[0]
-                    for r in cand.select(
-                        F.explode(
-                            F.array(
-                                self._pfx_expr(F.col("id_a")),
-                                self._pfx_expr(F.col("id_b")),
-                            )
-                        ).alias("p")
-                    ).distinct().collect()
-                )
-            else:
-                cand_pfx = None
-            store_lookup = self._read(
-                self._sigs, self._sig_dirs(cand_pfx), sig,
-                [id_col] + mh_cols,
-            )
-        else:
-            # EMPTY store: the cand_pfx collect's only purpose is
-            # pruning the sigs read, and there is nothing to prune —
-            # but the collect would still MATERIALIZE the full
-            # candidate set eagerly. On a bootstrap probe whose
-            # caller never consumes the pairs (commit-only ingest of
-            # a corpus), that materialization is pure waste — and
-            # under a template flood it is the quadratic wall, paid
-            # for nothing (r13: a 20k-copy flood made the collect
-            # effectively unbounded). Keep the whole pairs plan lazy
-            # instead; callers that do consume pairs pay the
-            # candidate volume exactly once.
-            store_lookup = sig.select(id_col, *mh_cols).limit(0)
-        lookup = store_lookup.unionByName(
-            fresh_sig.select(id_col, *mh_cols)
-        )
-        sa = lookup.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(c).alias(f"__a_{c}") for c in mh_cols],
-        )
-        sb = lookup.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(c).alias(f"__b_{c}") for c in mh_cols],
-        )
-        matches = F.lit(0)
-        for c in mh_cols:
-            matches = matches + F.when(
-                F.col(f"__a_{c}") == F.col(f"__b_{c}"), 1
-            ).otherwise(0)
-        pairs = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (matches / F.lit(self.num_hashes)).alias("est_jaccard"),
-            )
-            .filter(F.col("est_jaccard") >= threshold)
-        )
-        return fresh_sig, pairs
-
-    # -------------------------------------------------------- commit
-    # per-partition-dir file count that triggers auto-compaction at
-    # the end of a commit: every commit adds ~1 file per touched dir,
-    # so an unmaintained long stream accumulates one file per batch
-    # per dir and the probe's pruned reads degrade into a
-    # small-files listing problem. 64 bounds a dir's files while
-    # keeping compaction amortized (one fold per 64 batches).
-    COMPACT_THRESHOLD = 64
-
-    def commit(self, fresh_sig: DataFrame, batch_id: int = 0) -> None:
-        """Append a batch's fresh signatures: band rows FIRST, then
-        signature rows (see module docstring for the crash order).
-        Each partition dir only ever GAINS files — O(batch) writes —
-        and when the FULLEST sigs partition dir crosses
-        COMPACT_THRESHOLD files the whole store folds to one file per
-        dir (stage + swap, crash leaves old or new set, both
-        complete)."""
-        from data_engineering_pipeline_spark.operators.dedup import (
-            _band_rows,
-            _band_structs,
-        )
-
-        self._write_meta()
-        rows = _band_rows(self.num_hashes, self.bands)
-        band_cols = _band_structs(self.bands, rows)
-        stage = os.path.join(self.root, ".stage-" + uuid.uuid4().hex)
-        b_stage = os.path.join(stage, "banded")
-        s_stage = os.path.join(stage, "sigs")
-        banded = (
-            fresh_sig.select(
-                F.col(self.id_col),
-                F.explode(F.array(*band_cols)).alias("bb"),
-            )
-            .select(
-                self.id_col,
-                F.col("bb.band").alias("band"),
-                F.col("bb.bucket").alias("bucket"),
-            )
-            .withColumn(
-                "bpfx", F.pmod(F.col("bucket"), F.lit(self.bucket_pfx))
-            )
-        )
-        # one file per partition dir per commit: repartition by the
-        # partition columns so a batch adds bands*bucket_pfx files,
-        # not tasks x dirs
-        sigs = fresh_sig.withColumn(
-            "pfx", self._pfx_expr(F.col(self.id_col))
-        )
-        # STAGE the two layouts concurrently (guide §2.6 — overlap
-        # independent jobs): the writes share only the checkpointed
-        # fresh_sig (concurrent first-materialization of one local
-        # checkpoint is a synchronized RDDCheckpointData path), and
-        # the crash-order contract lives in the MOVES below, which
-        # stay strictly banded-then-sigs. Staging was two serial
-        # driver jobs per commit; for a micro-batch each is mostly
-        # fixed job cost, so overlapping them cuts the commit wall
-        # by close to the smaller write.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stage_banded() -> None:
-            banded.repartition("band", "bpfx").write.partitionBy(
-                "band", "bpfx"
-            ).mode("overwrite").parquet(b_stage)
-
-        def _stage_sigs() -> None:
-            sigs.repartition("pfx").write.partitionBy("pfx").mode(
-                "overwrite"
-            ).parquet(s_stage)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(_stage_banded)
-            fs = pool.submit(_stage_sigs)
-            fb.result()
-            fs.result()
-        tok = f"{batch_id}-{uuid.uuid4().hex}"
-        if _move_partition_files(b_stage, self._banded, tok) == 0:
-            # empty batch: nothing to land (a replayed batch's fresh
-            # set is empty — no empty part-files accumulating)
-            shutil.rmtree(stage, ignore_errors=True)
-            return
-        _move_partition_files(s_stage, self._sigs, tok)
-        shutil.rmtree(stage, ignore_errors=True)
-        # stamp each live layout dir with its modulus (first commit
-        # creates the dirs; later commits are a no-op stat)
-        if _read_layout(self._banded) is None:
-            _write_layout(self._banded, {"bucket_pfx": self.bucket_pfx})
-        if _read_layout(self._sigs) is None:
-            _write_layout(self._sigs, {"sig_pfx": self.sig_pfx})
-        # trigger on the FULLEST dir, not the lexicographically first:
-        # skewed/tiny batches don't touch dirs symmetrically, so a
-        # single sampled dir can lag the real maximum by a multiple
-        # (the walk is bounded — post-compaction every dir holds one
-        # file, so this counts at most dirs x threshold files).
-        # auto_grow: the fold is also the point where the store checks
-        # whether its partition dirs have outgrown the probe-read
-        # budget and doubles the prefix moduli if so.
-        dirs = self._sig_dirs(None)
-        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
-            self.compact(auto_grow=True)
-
-    # --------------------------------------------------- maintenance
-    def migrate_flat(self, flat_sigs: DataFrame, batch_id: int = 0) -> None:
-        """One-shot migration from the flat single-directory store:
-        commit the whole flat frame as one batch (anti-joined against
-        anything already migrated, so a crashed migration replays to
-        convergence)."""
-        fresh = flat_sigs
-        if self.exists():
-            fresh = flat_sigs.join(
-                self.seen_ids(flat_sigs.select(self.id_col)),
-                self.id_col,
-                "left_anti",
-            )
-        self.commit(fresh, batch_id)
-
-    # auto-grow target: compact(auto_grow=True) doubles a layout's
-    # prefix modulus until each partition dir holds at most this many
-    # bytes — the invariant that keeps a probe's read volume
-    # batch-proportional as the corpus grows (each opened dir is
-    # 1/(bands*bucket_pfx) of the store; a fixed modulus makes that
-    # slice grow linearly with the corpus, addendum 59's honest
-    # ceiling).
-    AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
-    MAX_PFX = 4096
-
-    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
-        total = 0
-        for r, _dirs, files in os.walk(base):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(r, f))
-                    except OSError:
-                        pass
-        new = cur
-        while (
-            new < self.MAX_PFX
-            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
-        ):
-            new *= 2
-        return new
 
     def compact(
         self,
@@ -674,97 +768,32 @@ class BandedSignatureStore:
         to_bucket_pfx: int | None = None,
         auto_grow: bool = False,
     ) -> None:
-        """Fold each partition dir's accumulated per-batch files into
-        one file (stage + swap per store; crash leaves either the old
-        or the new file set, both complete).
-
-        `to_sig_pfx` / `to_bucket_pfx` MIGRATE the store to new prefix
-        moduli in the same rewrite — compact already touches every
-        file, so it is the one legal point where the partitioning may
-        change (r11 VERDICT item 5: a fixed bucket_pfx caps pruning as
-        the corpus grows). `auto_grow=True` picks the moduli instead:
-        doubled until each partition dir is back under
-        AUTO_GROW_DIR_BYTES — the commit-time auto-compaction passes
-        this, so a long-running store re-partitions itself as it
-        grows. Crash-safe: each staged layout dir carries its own
-        `_layout.json` (swapped atomically with the dir), so dying
-        between the two layout swaps leaves banded at the new modulus
-        and sigs at the old — and the next open reads each under its
-        true modulus. The root _meta.json is rewritten LAST (fresh
-        handles adopt it; per-layout files win until then)."""
-        new_sig = to_sig_pfx or self.sig_pfx
-        new_bucket = to_bucket_pfx or self.bucket_pfx
-        if auto_grow:
-            if _dir_has_parquet(self._banded):
-                new_bucket = max(
-                    new_bucket,
-                    self._grown_pfx(self._banded, self.bands, new_bucket),
-                )
-            if _dir_has_parquet(self._sigs):
-                new_sig = max(
-                    new_sig, self._grown_pfx(self._sigs, 1, new_sig)
-                )
-        for base in (self._banded, self._sigs):
-            if not _dir_has_parquet(base):
-                continue
-            df = self.spark.read.parquet(base)
-            if base is self._banded:
-                pcols = ["band", "bpfx"]
-                if new_bucket != self.bucket_pfx:
-                    df = df.drop("bpfx").withColumn(
-                        "bpfx",
-                        F.pmod(F.col("bucket"), F.lit(new_bucket)),
-                    )
-                layout = {"bucket_pfx": new_bucket}
-            else:
-                pcols = ["pfx"]
-                if new_sig != self.sig_pfx:
-                    df = df.drop("pfx").withColumn(
-                        "pfx",
-                        F.pmod(
-                            F.xxhash64(F.col(self.id_col)),
-                            F.lit(new_sig),
-                        ),
-                    )
-                layout = {"sig_pfx": new_sig}
-            stage = base + ".compact-" + uuid.uuid4().hex[:8]
-            df.repartition(*pcols).write.partitionBy(*pcols).mode(
-                "overwrite"
-            ).parquet(stage)
-            _write_layout(stage, layout)
-            aside = base + ".old-" + uuid.uuid4().hex[:8]
-            os.rename(base, aside)
-            os.rename(stage, base)
-            shutil.rmtree(aside, ignore_errors=True)
-        self.bucket_pfx, self.sig_pfx = new_bucket, new_sig
-        self._rewrite_meta()
+        """Fold per-batch files to one per dir, optionally migrating
+        the prefix moduli (see BucketedAppendStore._compact)."""
+        self._compact(to_bucket_pfx, to_sig_pfx, auto_grow)
 
 
-def open_migrated(
-    spark: SparkSession, root: str, **kwargs
-) -> BandedSignatureStore:
-    """Open a store at `root`, migrating a pre-bucketing FLAT layout
-    (part-files directly in the directory — streaming/sinks.py's old
-    `_append_parquet` shape and the curation pipeline's old
-    mode-append shape) in place. Crash-safe: the flat files are only
-    removed AFTER the migration commit lands; a replayed migration
-    anti-joins to a no-op."""
-    st = BandedSignatureStore(spark, root, **kwargs)
-    if not os.path.isdir(root):
-        return st
-    flat = sorted(
-        f for f in os.listdir(root) if f.endswith(".parquet")
-    )
-    if flat:
-        df = spark.read.parquet(*[os.path.join(root, f) for f in flat])
-        mh = [c for c in df.columns if c.startswith("mh_")]
-        st.migrate_flat(df.select(st.id_col, *mh))
-        for f in flat:
-            os.remove(os.path.join(root, f))
-        success = os.path.join(root, "_SUCCESS")
-        if os.path.exists(success):
-            os.remove(success)
-    return st
+def _write_concurrently(spark: SparkSession, writes: list) -> None:
+    """Run independent write jobs on their own threads and wait for
+    all of them. Each thread inherits the caller's Spark local
+    properties (job group, description), so the jobs stay attributed
+    to the caller. One failure re-raises as itself; several raise
+    together as an ExceptionGroup — none is swallowed."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        # one wrap per write: each captures its own copy of the local
+        # properties, so the threads never share one mutable set
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(w)) for w in writes
+        ]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise ExceptionGroup("concurrent writes failed", errors)
 
 
 def _dir_has_parquet(path: str) -> bool:

@@ -35,7 +35,7 @@ from data_engineering_pipeline_spark.operators.dedup import (
     exact_dedup,
 )
 from data_engineering_pipeline_spark.operators.sig_store import (
-    open_migrated as open_sig_store,
+    BandedSignatureStore,
 )
 from data_engineering_pipeline_spark.operators.sampling import (
     temperature_rebalance,
@@ -677,9 +677,8 @@ def curate_increment(
     # never re-derives band buckets from the K signature columns —
     # the addendum-56 8.6x/decade read term); losers accumulate in
     # their own store so later rebuilds remember every round's drop
-    # decisions without rescoring old pairs. A flat pre-r11 store is
-    # migrated in place on first open.
-    store = open_sig_store(spark, p["sigs"])
+    # decisions without rescoring old pairs.
+    store = BandedSignatureStore(spark, p["sigs"])
     seen = (
         store.seen_ids(landed.select("doc_id")) if store.exists()
         else landed.select("doc_id").limit(0)

@@ -92,7 +92,6 @@ def _incremental_dedup_sink(
     id_col: str,
     probe_fn,
     commit_fn,
-    heal_paths: tuple = (),
 ) -> StreamingQuery:
     """Shared core of the streaming near-dup sinks: per micro-batch,
     `probe_fn(batch_df) -> (state_delta, pairs)` produces duplicate
@@ -100,9 +99,9 @@ def _incremental_dedup_sink(
     rows, and `commit_fn(state_delta, batch_id)` lands the fresh state
     — the drop rule and the append discipline are identical for any
     incremental pair producer (MinHash text, hyperplane embeddings...).
-    State storage is the provider's concern: the embedding sink keeps
-    the flat append directory; the MinHash sink probes/commits through
-    the band-bucketed BandedSignatureStore (operators/sig_store.py).
+    State storage is the provider's concern: both sinks probe/commit
+    through a bucketed append store (operators/sig_store.py
+    BandedSignatureStore, operators/vec_store.py VecIndexStore).
 
     Both the output table and the state store are APPEND-organized:
     each batch moves only its own part-files into the directory (ids
@@ -115,26 +114,16 @@ def _incremental_dedup_sink(
     checkpoint commit re-delivers the batch; the keys-only anti-joins
     (against the state store inside probe_fn, against the output ids
     here) re-derive only the still-missing rows, so append + replay
-    CONVERGES — no remnant dirs, no healing pass needed for new-era
-    stores. recover_table still runs once at start to heal stores left
-    by the pre-append swap scheme.
+    CONVERGES — no remnant dirs, no healing pass needed. The only
+    start-up sweep removes the output's crashed append stages.
 
     Drop rule per new doc: it loses to ANY earlier-seen near-duplicate,
     and to a same-batch near-duplicate with a lower id — the streaming
     form of exact_dedup's deterministic keep-lowest-id."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from data_engineering_pipeline_spark.operators.upsert import (
-        recover_table,
-    )
-
-    # self-heal pre-append-era swap remnants and crashed append stages
-    # from a previous run
-    for pth in (out_path, *heal_paths):
-        recover_table(pth)
-        _sweep_stale_appends(pth)
+    # crashed append stages from a previous run
+    _sweep_stale_appends(out_path)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -201,18 +190,17 @@ def near_dedup_sink(
     persisted once at commit time (never re-derived per batch), the
     probe lists only the (band, bucket-prefix) dirs the batch's own
     buckets hash into, and the candidate join broadcasts the batch
-    side, so the store is scanned (pruned), never shuffled. A flat
-    pre-r11 state directory is migrated in place on first open.
+    side, so the store is scanned (pruned), never shuffled.
     Single-writer, like the reference."""
     from data_engineering_pipeline_spark.operators.sig_store import (
-        open_migrated,
+        BandedSignatureStore,
     )
 
     holder: dict = {}
 
     def _store(spark):
         if "s" not in holder:
-            holder["s"] = open_migrated(
+            holder["s"] = BandedSignatureStore(
                 spark, sig_path, id_col=id_col, text_col=text_col
             )
         return holder["s"]
@@ -229,16 +217,8 @@ def near_dedup_sink(
     def _commit(delta, batch_id):
         _store(delta.sparkSession).commit(delta, batch_id)
 
-    # heal_paths: recover_table/_sweep_stale_appends only touch
-    # `{sig_path}.__tmp__/__old__/__app__` siblings, which the banded
-    # store never creates — a no-op for new-layout stores, but it
-    # restores the legacy healing for a pre-r11 flat state dir (a
-    # crashed swap's `.__old__` remnant with the live dir missing
-    # would otherwise migrate an EMPTY store, silently losing all
-    # prior dedup state).
     return _incremental_dedup_sink(
-        stream_docs, out_path, checkpoint, id_col, _probe, _commit,
-        heal_paths=(sig_path,),
+        stream_docs, out_path, checkpoint, id_col, _probe, _commit
     )
 
 
@@ -268,20 +248,19 @@ def embedding_near_dedup_sink(
     sig-prefix) dirs the batch's probe signatures hash into and the
     exact-cosine verify fetches only the candidate ids' vector
     prefixes, where the old flat index re-read every row (with the
-    vector duplicated per hash table) per micro-batch. A flat pre-r12
-    index directory is migrated in place on first open. The batch's
+    vector duplicated per hash table) per micro-batch. The batch's
     signatures are localCheckpointed inside the store probe (the old
     pin_batch: the signer compiles tables x bits x dim literals into
     the plan — addendum 4's ~25 s/batch constant)."""
     from data_engineering_pipeline_spark.operators.vec_store import (
-        open_migrated,
+        VecIndexStore,
     )
 
     holder: dict = {}
 
     def _store(spark):
         if "s" not in holder:
-            holder["s"] = open_migrated(
+            holder["s"] = VecIndexStore(
                 spark, index_path, id_col=id_col, vec_col=vec_col,
                 dim=dim, bits=bits, n_tables=n_tables,
             )
@@ -296,12 +275,8 @@ def embedding_near_dedup_sink(
     def _commit(delta, batch_id):
         _store(delta.sparkSession).commit(delta, batch_id)
 
-    # heal_paths: restores a pre-r12 flat index left mid-swap by the
-    # legacy scheme before the flat->bucketed migration runs (the
-    # banded store never creates swap remnants — no-op for new stores)
     return _incremental_dedup_sink(
-        stream_vecs, out_path, checkpoint, id_col, _probe, _commit,
-        heal_paths=(index_path,),
+        stream_vecs, out_path, checkpoint, id_col, _probe, _commit
     )
 
 

@@ -219,7 +219,7 @@ def test_crash_between_side_stores_converges(spark, tmp_path, monkeypatch):
     work = str(tmp_path / "w")
     curate_batch(spark, _mk_docs(spark, b1), work)
 
-    real_open = cp.open_sig_store
+    real_store = cp.BandedSignatureStore
 
     class _CrashStore:
         """Store proxy whose .commit raises — the crash point (losers
@@ -233,13 +233,13 @@ def test_crash_between_side_stores_converges(spark, tmp_path, monkeypatch):
                 raise RuntimeError("simulated crash before sigs append")
             return getattr(self._st, name)
 
-    def crashing_open(spark_, root, **kw):
-        return _CrashStore(real_open(spark_, root, **kw))
+    def crashing_store(spark_, root, **kw):
+        return _CrashStore(real_store(spark_, root, **kw))
 
-    monkeypatch.setattr(cp, "open_sig_store", crashing_open)
+    monkeypatch.setattr(cp, "BandedSignatureStore", crashing_store)
     with pytest.raises(RuntimeError, match="simulated crash"):
         curate_increment(spark, _mk_docs(spark, b2), work, batch_id=1)
-    monkeypatch.setattr(cp, "open_sig_store", real_open)
+    monkeypatch.setattr(cp, "BandedSignatureStore", real_store)
 
     # losers landed, sigs did not — the exact crash window; the replay
     # must still drop doc 990 and converge to the one-shot pipeline

@@ -156,16 +156,11 @@ def test_meta_guard_rejects_structural_mismatch(spark, tmp_path):
 
 
 @pytest.mark.slow  # heavy e2e/property: close-out tier (pytest.ini)
-def test_migrate_flat_and_compact(spark, tmp_path):
-    """Flat-store migration converges (idempotent under replay) and
-    compaction folds per-batch files without changing contents."""
-    b1 = _docs(spark, range(0, 20))
-    flat, _ = incremental_minhash_dedup(b1, None)
+def test_compact_folds_files(spark, tmp_path):
+    """Compaction folds per-batch files without changing contents."""
     st = BandedSignatureStore(spark, str(tmp_path / "st"))
-    st.migrate_flat(flat)
-    st.migrate_flat(flat)  # replayed migration: no duplicates
-    sigs = spark.read.parquet(str(tmp_path / "st" / "sigs"))
-    assert sigs.count() == 20
+    f1, _ = st.probe(_docs(spark, range(0, 20)))
+    st.commit(f1, 1)
     before = _pairset(st.probe(_docs(spark, [500, 501]))[1])
     f2, _ = st.probe(_docs(spark, range(20, 40)))
     st.commit(f2, 2)

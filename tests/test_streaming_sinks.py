@@ -953,68 +953,3 @@ def test_dedup_stream_drops_same_key_different_ts(spark, tmp_path, sf_smoke):
         "SELECT count(*) c, count(DISTINCT event_id) d FROM dedup_out2"
     ).collect()[0]
     assert got.c == got.d == ev.count()
-
-
-def test_near_dedup_sink_heals_crashed_legacy_sig_swap(spark, tmp_path):
-    """A pre-r11 run crashed mid-swap on the FLAT signature store (live
-    dir set aside as `.__old__*`, live missing). Restarting the sink
-    must restore the old state BEFORE the flat->banded migration runs —
-    otherwise an empty store is migrated and every prior doc's
-    near-duplicate is silently re-admitted (r11 ADVICE item 1)."""
-    import os
-    import time
-
-    from data_engineering_pipeline_spark.streaming.sinks import (
-        near_dedup_sink,
-    )
-
-    import random
-
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(400)]
-    texts = {
-        i: " ".join(rng.choice(vocab) for _ in range(60)) for i in range(8)
-    }
-    schema = "doc_id long, text string"
-
-    src = tmp_path / "heal_sig_src"
-    src.mkdir()
-    out = str(tmp_path / "heal_sig_out")
-    sig = str(tmp_path / "heal_sig_state")
-    ck = str(tmp_path / "heal_sig_ck")
-
-    def land(rows, name, order):
-        df = spark.createDataFrame(rows, schema)
-        stage = tmp_path / f"hs_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(stage))
-        part = next(
-            p for p in os.listdir(stage) if p.endswith(".parquet")
-        )
-        dst = src / f"{name}.parquet"
-        os.rename(stage / part, dst)
-        os.utime(dst, (time.time() + order, time.time() + order))
-
-    land([(i, t) for i, t in texts.items()], "b1", 0)
-    q = near_dedup_sink(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(str(src)),
-        out, sig, ck, threshold=0.7,
-    )
-    q.awaitTermination()
-
-    # simulate the legacy stage-and-swap crash: live state set aside
-    os.rename(sig, f"{sig}.__old__dead")
-
-    near = texts[3].replace(texts[3].split()[0], "zzz", 1)
-    land([(2000, near), (2001, "entirely novel words " * 10)], "b2", 1)
-    q = near_dedup_sink(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(str(src)),
-        out, sig, ck, threshold=0.7,
-    )
-    q.awaitTermination()
-
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert 2000 not in kept  # near-dup of pre-crash doc 3 still dropped
-    assert 2001 in kept      # novel doc survives
-    assert not os.path.exists(f"{sig}.__old__dead")  # remnant healed

@@ -1,7 +1,6 @@
 """Bucketed vector index store (operators/vec_store.py): pair parity
 with the flat incremental operator, replay convergence, pruned reads
-(file-open witness), flat-layout migration, crash heal, and the
-prefix-moduli migration — the embedding twin of tests/test_sig_store.py."""
+(file-open witness), crash heal, and the prefix-moduli migration — the embedding twin of tests/test_sig_store.py."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from data_engineering_pipeline_spark.operators.similarity import (
 )
 from data_engineering_pipeline_spark.operators.vec_store import (
     VecIndexStore,
-    open_migrated,
 )
 
 CFG = dict(dim=16, bits=4, n_tables=2)
@@ -101,40 +99,6 @@ def test_probe_opens_fraction_of_dirs(spark, tmp_path):
     # one vector signs once per table: at most n_tables dirs touched
     assert stats["signed_dirs_opened"] <= CFG["n_tables"]
     assert stats["signed_dirs_total"] > CFG["n_tables"]
-
-
-def test_migrate_flat_layout_in_place(spark, tmp_path):
-    """A pre-r12 flat index dir (embedding_index part-files directly in
-    the root) migrates on first open; replayed migration is a no-op;
-    probes against the migrated state match the flat operator."""
-    root = str(tmp_path / "st")
-    b1 = _vecs(spark, range(0, 12))
-    flat_state, _ = incremental_embedding_dedup(b1, None, **FLAT_CFG)
-    os.makedirs(root, exist_ok=True)
-    flat_state.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "stage")
-    )
-    for i, f in enumerate(
-        p for p in os.listdir(tmp_path / "stage") if p.endswith(".parquet")
-    ):
-        os.rename(os.path.join(tmp_path / "stage", f),
-                  os.path.join(root, f"part-{i:05d}.parquet"))
-
-    st = open_migrated(spark, root, **CFG)
-    assert not any(
-        f.endswith(".parquet") for f in os.listdir(root)
-    )  # flat files consumed
-    got = {
-        r["__id"]
-        for r in spark.read.parquet(os.path.join(root, "vecs")).collect()
-    }
-    assert got == set(range(12))
-
-    st2 = open_migrated(spark, root, **CFG)  # replay: no-op
-    b2 = _vecs(spark, [3000, 1])  # 1 is a replayed id; 3000 fresh
-    _, flat_p = incremental_embedding_dedup(b2, flat_state, **FLAT_CFG)
-    _, p = st2.probe(b2, threshold=0.9, probe_radius=1)
-    assert _pairset(p) == _pairset(flat_p)
 
 
 def test_compact_migrates_moduli_and_heals_crash(spark, tmp_path):
