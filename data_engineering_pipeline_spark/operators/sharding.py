@@ -39,6 +39,7 @@ from data_engineering_pipeline_spark.operators.sampling import (
     key_hash,
     mixed_key_hash,
 )
+from data_engineering_pipeline_spark.sources.dirswap import DirSwap
 
 
 def _hashable_keys(df: DataFrame, keys: list[str]) -> list[Column]:
@@ -175,21 +176,21 @@ def refresh_shards(
     full pass over the source (the shard hash is not a stats-prunable
     column — documented tradeoff; at real scale you co-persist `shard`
     as a stat column to prune the scan too), but the WRITE — the
-    expensive half of an export — touches only changed shards. Each
-    shard directory is replaced via write-aside + atomic rename;
-    recover_shards() (run on every refresh start) heals the one
-    crash window — dead between the aside-rename and the swap-in —
-    by restoring the aside, and sweeps stale stage dirs; replaying a
-    refresh then converges because shard contents are pure functions
-    of the snapshot. The applied-version watermark lives in
-    `_shards_state.json` (tmp+rename); it only advances AFTER every
-    swap landed, so a crash mid-refresh replays the whole refresh."""
+    expensive half of an export — touches only changed shards. The
+    changed shard dirs are staged and swapped in through
+    sources/dirswap.py, one unit per shard; a changed shard every doc
+    left is absent from the stage, so the swap removes it (absent dir
+    == empty shard). A full rebuild swaps the whole export as one
+    unit. Each refresh first heals an interrupted swap, and replaying
+    a refresh converges because shard contents are pure functions of
+    the snapshot. The applied-version watermark lives in
+    `_shards_state.json` (tmp+rename); it only advances AFTER the swap
+    landed, so a crash mid-refresh replays the whole refresh."""
     import json
     import os
-    import shutil
     import uuid
 
-    recover_shards(out_dir)
+    swap = DirSwap(out_dir)
     state_path = os.path.join(out_dir, "_shards_state.json")
     # layout/hash version: shard ASSIGNMENT is a pure function of the
     # key-hash algorithm, so a hash change (key_hash -> mixed_key_hash,
@@ -228,17 +229,12 @@ def refresh_shards(
     def _full_rebuild() -> dict:
         # stage-and-swap, NOT an in-place overwrite of the live export:
         # mode-overwrite deletes every existing shard dir at job start,
-        # so a crash mid-rebuild would leave the consumer with NOTHING
-        # (no asides to recover). Staging keeps the pre-rebuild export
-        # serving until one rename pair swaps the new one in;
-        # recover_shards heals the between-renames window.
-        stage_root = f"{out_dir}.__rbstage__{uuid.uuid4().hex[:8]}"
-        export_shards(src.read(), stage_root, n_shards, keys, epoch=epoch)
-        aside = f"{out_dir}.__rbold__{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(out_dir):
-            os.rename(out_dir, aside)
-        os.rename(stage_root, out_dir)
-        shutil.rmtree(aside, ignore_errors=True)
+        # so a crash mid-rebuild would leave the consumer with NOTHING.
+        # Staging keeps the pre-rebuild export serving until the swap.
+        with swap.writing():
+            export_shards(src.read(), swap.stage, n_shards, keys,
+                          epoch=epoch)
+        swap.commit()
         _write_state(head)
         return {"rebuilt": list(range(n_shards)), "applied": head}
 
@@ -270,77 +266,19 @@ def refresh_shards(
     sh = shuffle_shard(
         full, n_shards, *_hashable_keys(full, keys), epoch=epoch
     )
-    stage = os.path.join(out_dir, f".stage-{uuid.uuid4().hex[:8]}")
-    (
-        sh.filter(F.col("shard").isin([int(c) for c in changed]))
-        .repartition(len(changed), F.col("shard"))
-        .sortWithinPartitions("shard", "__h", *keys)
-        .drop("__h")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    for c in changed:
-        live = os.path.join(out_dir, f"shard={c}")
-        fresh = os.path.join(stage, f"shard={c}")
-        aside = live + "." + uuid.uuid4().hex[:6] + ".old"
-        if os.path.isdir(live):
-            os.rename(live, aside)
-        if os.path.isdir(fresh):
-            os.rename(fresh, live)
-        # else: every doc left this shard — absent dir == empty shard
-        if os.path.isdir(aside):
-            shutil.rmtree(aside)
-    shutil.rmtree(stage)
+    with swap.writing():
+        (
+            sh.filter(F.col("shard").isin([int(c) for c in changed]))
+            .repartition(len(changed), F.col("shard"))
+            .sortWithinPartitions("shard", "__h", *keys)
+            .drop("__h")
+            .write.partitionBy("shard")
+            .mode("overwrite")
+            .parquet(swap.stage)
+        )
+    swap.commit([f"shard={c}" for c in changed])
     _write_state(head)
     return {"rebuilt": changed, "applied": head}
-
-
-def recover_shards(out_dir: str) -> list[str]:
-    """Heal an interrupted refresh_shards swap: a `shard=K.xxxxxx.old`
-    aside with NO live `shard=K` means the writer died between the
-    two renames — restore the aside (the pre-refresh shard; the
-    replayed refresh rebuilds it). An aside WITH a live dir means the
-    swap completed — drop the leftover. Stale `.stage-*` dirs from a
-    writer that died mid-write are swept (never referenced)."""
-    import glob as _glob
-    import os
-    import re
-    import shutil
-
-    healed = []
-    # full-rebuild remnants are SIBLINGS of out_dir (handled before the
-    # isdir early-exit: the crash window leaves out_dir missing with
-    # the pre-rebuild copy asided): restore the aside when the live
-    # export is gone, drop it when the swap completed; incomplete
-    # rebuild stages are always garbage (the replay re-exports).
-    for aside in sorted(_glob.glob(f"{out_dir}.__rbold__*")):
-        if not os.path.isdir(out_dir):
-            os.rename(aside, out_dir)
-            healed.append(f"restored:{os.path.basename(aside)}")
-        else:
-            shutil.rmtree(aside, ignore_errors=True)
-            healed.append(f"dropped:{os.path.basename(aside)}")
-    for stage in _glob.glob(f"{out_dir}.__rbstage__*"):
-        shutil.rmtree(stage, ignore_errors=True)
-        healed.append(f"swept:{os.path.basename(stage)}")
-    if not os.path.isdir(out_dir):
-        return healed
-    for aside in _glob.glob(os.path.join(out_dir, "shard=*.old")):
-        m = re.match(r"(.*shard=\d+)\.[0-9a-f]+\.old$", aside)
-        if not m:
-            continue
-        live = m.group(1)
-        if os.path.isdir(live):
-            shutil.rmtree(aside)
-            healed.append(f"dropped:{os.path.basename(aside)}")
-        else:
-            os.rename(aside, live)
-            healed.append(f"restored:{os.path.basename(live)}")
-    for stage in _glob.glob(os.path.join(out_dir, ".stage-*")):
-        shutil.rmtree(stage)
-        healed.append(f"swept:{os.path.basename(stage)}")
-    return healed
 
 
 def curriculum_interleave(

@@ -8,23 +8,24 @@ idioms:
 - `merge_last_write_wins(old, new, keys, order_col)`: pure-DataFrame merge
   — union + `row_number() over (partition by keys order by version desc)`
   = 1. Works on any DataFrames; one shuffle on the key.
-- `upsert_parquet(...)`: read-merge-overwrite for a Parquet path. Writes
-  to a temp dir then swaps, emulating the reference's commit-on-success
-  scope (database.py:60-71). Single-writer, like the reference.
-
-At 100 TB scale the same `merge_last_write_wins` plan is what a Delta/
-Iceberg MERGE compiles to for full-overwrite; with a partitioned layout,
-replace only affected partitions (dynamic partition overwrite).
+- `upsert_parquet(...)`: read-merge-write for a Parquet path, the one
+  upsert path for plain Parquet layers. It stages the merged rows and
+  swaps them in through sources/dirswap.py, emulating the reference's
+  commit-on-success scope (database.py:60-71). With `partition_cols`
+  only the partitions the batch touches are read and swapped (dynamic
+  partition overwrite), the form that holds up at 100 TB.
+  Single-writer, like the reference.
 """
 
 from __future__ import annotations
 
+import glob
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from data_engineering_pipeline_spark.sources.dirswap import DirSwap
 
 
 def merge_last_write_wins(
@@ -62,227 +63,61 @@ def upsert_parquet(
     order_col: str,
     partition_cols: list[str] | None = None,
 ) -> int:
-    """Merge `new` into the Parquet table at `path`; returns merged count.
-    Re-running with the same input leaves the table unchanged
-    (idempotency property, README1.md:128-132).
+    """Merge `new` into the Parquet table at `path`. Re-running with the
+    same input leaves the table unchanged (idempotency property,
+    README1.md:128-132). Returns the number of rows written: the whole
+    merged table, or with `partition_cols` the touched partitions.
 
-    `partition_cols` lays the merged table out hive-partitioned so
-    downstream scans filtered on those columns prune directories (the
-    SURVEY §4.2 default for the cleaned layer). At very large scale,
-    pair it with dynamic partition overwrite to rewrite only the
-    partitions the batch touches."""
-    old = spark.read.parquet(path) if os.path.exists(path) else None
+    Without `partition_cols` the whole table is read, merged and
+    swapped in as one unit. With them the table is laid out
+    hive-partitioned, so downstream scans filtered on those columns
+    prune directories (the SURVEY §4.2 default for the cleaned layer),
+    and only the partitions the batch touches are read, rewritten and
+    swapped: the touched partition VALUES are collected (one row per
+    partition, not per record), the old side is read through a
+    partition-pruned filter, and untouched partitions are never read,
+    shuffled or rewritten. Keys must not move between partitions
+    (partition_cols ⊆ the key's functional dependencies), the standard
+    constraint for a partition-scoped MERGE. A table that does not
+    exist yet is written whole either way.
+
+    The merged rows are fully staged before anything live is touched
+    (so the lazy read of the live table completes first), then
+    swapped in through sources/dirswap.py, which also heals a previous
+    run's interrupted swap before the table is read."""
+    swap = DirSwap(path)
+    old = None
+    if os.path.exists(path):
+        old = spark.read.parquet(path)
+        if partition_cols:
+            touched = new.select(*partition_cols).distinct().collect()
+            if not touched:
+                return 0  # empty batch: nothing to merge, table untouched
+            pred = None
+            for r in touched:
+                clause = None
+                for c in partition_cols:
+                    eq = F.col(c).eqNullSafe(F.lit(r[c]))
+                    clause = eq if clause is None else (clause & eq)
+                pred = clause if pred is None else (pred | clause)
+            old = old.filter(pred)
     merged = merge_last_write_wins(old, new, keys, order_col)
-    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
     writer = merged.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    # explicit schema: an EMPTY merged frame under partitionBy writes
-    # no data files, and schema inference over that raises — the count
-    # must come back 0, not AnalysisException
-    n = spark.read.schema(merged.schema).parquet(tmp).count()
-    # Swap via rename-aside so every intermediate state still has a
-    # recoverable table (the reference's transaction never loses the
-    # table, database.py:60-71): old -> .__old__, tmp -> live, then
-    # delete the old copy. A crash mid-sequence leaves either the
-    # original or the merged table on disk under a findable name —
-    # never a deleted table with the data stranded in a tmp dir.
-    old_aside = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-    had_old = os.path.exists(path)
-    if had_old:
-        os.rename(path, old_aside)
-    os.rename(tmp, path)
-    if had_old:
-        shutil.rmtree(old_aside)
+    with swap.writing():
+        writer.parquet(swap.stage)
+        # explicit schema: an EMPTY merged frame under partitionBy
+        # writes no data files, and schema inference over that raises —
+        # the count must come back 0, not AnalysisException. Counting
+        # the stage costs no second pass over the live table.
+        n = spark.read.schema(merged.schema).parquet(swap.stage).count()
+    units = None  # the whole table
+    if partition_cols and old is not None:
+        # the staged hive leaves are exactly the touched partitions
+        leaves = glob.glob(os.path.join(
+            glob.escape(swap.stage), *["*=*"] * len(partition_cols)
+        ))
+        units = sorted(os.path.relpath(d, swap.stage) for d in leaves)
+    swap.commit(units)
     return n
-
-
-def recover_table(path: str) -> str:
-    """Restore `path` to a consistent state after a crash anywhere in
-    upsert_parquet's write-swap sequence (single-writer, like the
-    reference's transaction, database.py:60-71). Returns one of
-    'clean' | 'finished_swap' | 'restored_old' | 'dropped_tmp'
-    describing what was found.
-
-    Decision table (remnants are `<path>.__tmp__*` / `<path>.__old__*`):
-    - live table present: the swap either never started or fully
-      completed before the cleanup step — keep live, drop remnants.
-    - live missing, a COMPLETE tmp exists (Spark's _SUCCESS marker):
-      the crash hit between the two renames — finish the swap.
-    - live missing, only an old-aside exists (or the tmp is partial):
-      the merge never committed — restore the old table; the batch
-      re-runs and idempotently converges.
-    """
-    import glob as _glob
-
-    tmps = sorted(_glob.glob(f"{path}.__tmp__*"), key=os.path.getmtime)
-    olds = sorted(_glob.glob(f"{path}.__old__*"), key=os.path.getmtime)
-    if os.path.exists(path):
-        for d in tmps + olds:
-            shutil.rmtree(d)
-        return "finished_swap" if (tmps or olds) else "clean"
-    complete = [t for t in tmps if os.path.exists(os.path.join(t, "_SUCCESS"))]
-    if complete:
-        os.rename(complete[-1], path)  # newest committed merge wins
-        for d in [t for t in tmps if t != complete[-1]] + olds:
-            shutil.rmtree(d)
-        return "finished_swap"
-    if olds:
-        os.rename(olds[-1], path)
-        for d in tmps + olds[:-1]:
-            shutil.rmtree(d)
-        return "restored_old"
-    for d in tmps:
-        shutil.rmtree(d)
-    return "dropped_tmp"
-
-
-def upsert_parquet_scoped(
-    spark: SparkSession,
-    path: str,
-    new: DataFrame,
-    keys: list[str],
-    order_col: str,
-    partition_cols: list[str],
-) -> int:
-    """Partition-scoped upsert: merge `new` into a hive-partitioned
-    Parquet table rewriting ONLY the partitions the batch touches —
-    the form that survives 100 TB, where `upsert_parquet`'s whole-table
-    read-merge-overwrite is a non-starter. Keys must not move between
-    partitions (partition_cols ⊆ the key's functional dependencies),
-    the standard constraint for partition-scoped MERGE.
-
-    Plan shape: the touched partition VALUES are collected (tiny — one
-    row per partition, not per record), the old side is read with a
-    partition-pruned filter (only touched directories are scanned), the
-    merged result is staged to a side directory, and the touched
-    partition dirs are swapped in one rename apiece (pre-batch copies
-    renamed aside first — recover_partitions heals any crash point).
-    Untouched partitions are never read, shuffled, or rewritten.
-    Returns the merged row count of the touched partitions."""
-    if not os.path.exists(path):
-        # bootstrap STAGES like upsert_parquet: a crash mid-write to
-        # the live path would leave a _temporary-only directory that
-        # exists-checks treat as a table but no reader can open (and
-        # no recover function heals); staging + one rename keeps every
-        # crash state either absent or complete. recover_table's
-        # __tmp__ namespace covers the remnant.
-        new_only = merge_last_write_wins(None, new, keys, order_col)
-        tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
-        new_only.write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(tmp)
-        n = spark.read.schema(new_only.schema).parquet(tmp).count()
-        os.rename(tmp, path)
-        return n
-    touched = new.select(*partition_cols).distinct().collect()
-    if not touched:
-        return 0  # empty batch: nothing to merge, table untouched
-    pred = None
-    for r in touched:
-        clause = None
-        for c in partition_cols:
-            eq = F.col(c).eqNullSafe(F.lit(r[c]))
-            clause = eq if clause is None else (clause & eq)
-        pred = clause if pred is None else (pred | clause)
-    old_touched = spark.read.parquet(path).filter(pred)
-    merged = merge_last_write_wins(old_touched, new, keys, order_col)
-    # Stage-then-swap, partition-scoped: the merged touched partitions
-    # are fully materialized to a staging dir FIRST (so the lazy read of
-    # the live path completes before anything live is touched), then
-    # each touched partition directory is renamed aside and replaced.
-    # This keeps upsert_parquet's crash contract at partition scope —
-    # every intermediate state leaves either the pre-batch or the merged
-    # copy of each partition under a findable name (__ptmp__/__pold__,
-    # healed by recover_partitions) — where a direct dynamic-overwrite
-    # of the live path would lose a partition's pre-batch rows if the
-    # commit crashed between clearing and re-populating it.
-    token = uuid.uuid4().hex[:8]
-    stage = f"{path}.__ptmp__{token}"
-    aside = f"{path}.__pold__{token}"
-    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
-    # count the STAGE (it holds exactly the merged touched partitions)
-    # before swapping — re-scanning the live table through the OR-of-
-    # partitions predicate after the swap costs a second pass for the
-    # identical number
-    n = spark.read.schema(merged.schema).parquet(stage).count()
-    for rel in _leaf_partitions(stage):
-        live_dir = os.path.join(path, rel)
-        if os.path.exists(live_dir):
-            aside_dir = os.path.join(aside, rel)
-            os.makedirs(os.path.dirname(aside_dir), exist_ok=True)
-            os.rename(live_dir, aside_dir)
-        os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-        os.rename(os.path.join(stage, rel), live_dir)
-    shutil.rmtree(aside, ignore_errors=True)
-    shutil.rmtree(stage)
-    return n
-
-
-def _leaf_partitions(root: str) -> list[str]:
-    """Relative paths of the hive leaf-partition directories under
-    `root` (the dirs that hold data files; markers like _SUCCESS at the
-    table root don't count)."""
-    leaves = []
-    for dirpath, _dirnames, filenames in os.walk(root):
-        if dirpath == root:
-            continue
-        if any(not f.startswith(("_", ".")) for f in filenames):
-            leaves.append(os.path.relpath(dirpath, root))
-    return sorted(leaves)
-
-
-def recover_partitions(path: str) -> str:
-    """Heal `path` after a crash anywhere in upsert_parquet_scoped's
-    stage-then-swap (remnants `<path>.__ptmp__<t>` / `<path>.__pold__<t>`,
-    paired by token). Returns 'clean' | 'finished_partition_swap' |
-    'rolled_back_partition_swap'.
-
-    - COMPLETE stage (_SUCCESS present): the merge committed before the
-      crash — roll FORWARD: finish swapping every leaf still in the
-      stage (aside the live copy first, same as the writer), then drop
-      remnants. Leaves already swapped are no longer in the stage, so
-      the roll-forward is idempotent under repeated crashes.
-    - Incomplete stage: the merge never committed — roll BACK: restore
-      any leaf that was asided but whose swap didn't land, drop the
-      stage; the batch re-runs and idempotently converges.
-    - Orphan aside (its stage already cleaned up): the swap finished —
-      restore only leaves missing live (none, normally), then drop.
-    """
-    import glob as _glob
-
-    status = "clean"
-    for stage in sorted(_glob.glob(f"{path}.__ptmp__*")):
-        token = stage.rsplit("__ptmp__", 1)[1]
-        aside = f"{path}.__pold__{token}"
-        if os.path.exists(os.path.join(stage, "_SUCCESS")):
-            for rel in _leaf_partitions(stage):
-                live_dir = os.path.join(path, rel)
-                if os.path.exists(live_dir):
-                    aside_dir = os.path.join(aside, rel)
-                    os.makedirs(os.path.dirname(aside_dir), exist_ok=True)
-                    os.rename(live_dir, aside_dir)
-                os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                os.rename(os.path.join(stage, rel), live_dir)
-            status = "finished_partition_swap"
-        else:
-            if os.path.exists(aside):
-                for rel in _leaf_partitions(aside):
-                    live_dir = os.path.join(path, rel)
-                    if not os.path.exists(live_dir):
-                        os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                        os.rename(os.path.join(aside, rel), live_dir)
-            status = "rolled_back_partition_swap"
-        shutil.rmtree(aside, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-    for aside in sorted(_glob.glob(f"{path}.__pold__*")):
-        for rel in _leaf_partitions(aside):
-            live_dir = os.path.join(path, rel)
-            if not os.path.exists(live_dir):
-                os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                os.rename(os.path.join(aside, rel), live_dir)
-        shutil.rmtree(aside, ignore_errors=True)
-        if status == "clean":
-            status = "finished_partition_swap"
-    return status

@@ -44,6 +44,7 @@ from data_engineering_pipeline_spark.operators.sharding import (
     refresh_shards,
 )
 from data_engineering_pipeline_spark.operators.text import quality_score
+from data_engineering_pipeline_spark.sources.dirswap import DirSwap
 from data_engineering_pipeline_spark.sources.snapshot_table import (
     Expectation,
     SnapshotTable,
@@ -319,21 +320,21 @@ def _freeze_decon(spark: SparkSession, eval_docs: DataFrame,
     rebuild refreezes it, so batch membership never changes which
     eval set a doc was screened against.
 
-    REFREEZE atomicity (r10, ADVICE): the three artifacts are written
-    into a staging dir and swapped into place with directory renames.
+    REFREEZE atomicity (r10, ADVICE): the three artifacts are staged
+    together and the whole dir is swapped in through sources/dirswap.py.
     Writing them as three independent overwrites was only crash-safe
     for a FIRST freeze; on a refreeze a crash between writes left the
     new hashes/meta paired with the previous freeze's bloom — a dir
     that exists and parses, so deltas silently probed a filter
     missing the new eval keys (or at the wrong modulus). With the
-    swap, the only crash windows leave either the old freeze fully
-    intact or no decon dir at all, and a missing dir fails the next
-    delta loudly (curate_increment checks isdir). Renames are atomic
-    on a posix driver-local work_dir; on an object store mount the
-    same windows apply to the rename pair, which is still a strictly
-    smaller exposure than three independent multi-file overwrites."""
+    swap a delta reads the old freeze or the new one, never a mix;
+    inside the swap's one rename pair the dir is missing, which fails
+    a delta loudly (curate_increment checks isdir) until the next
+    rebuild heals the swap. Renames are atomic on a posix driver-local
+    work_dir; on an object store mount the same windows apply to the
+    rename pair, which is still a strictly smaller exposure than three
+    independent multi-file overwrites."""
     import json
-    import shutil
 
     from data_engineering_pipeline_spark.operators.dedup import (
         _exploded_shingles,
@@ -344,12 +345,8 @@ def _freeze_decon(spark: SparkSession, eval_docs: DataFrame,
         bloom_build,
     )
 
-    stage = decon_dir + ".staging"
-    old = decon_dir + ".old"
-    for leftover in (stage, old):  # debris from a crashed prior swap
-        if os.path.isdir(leftover):
-            shutil.rmtree(leftover)
-
+    swap = DirSwap(decon_dir)
+    stage = swap.stage
     ev = eval_docs.select(
         F.monotonically_increasing_id().alias("__eid"), "text"
     )
@@ -358,40 +355,30 @@ def _freeze_decon(spark: SparkSession, eval_docs: DataFrame,
         .select(portable_token_hash(F.col("shingle")).alias("hk"))
         .distinct()
     )
-    hashes.write.mode("overwrite").parquet(
-        os.path.join(stage, "hashes")
-    )
-    hh = spark.read.parquet(os.path.join(stage, "hashes"))
-    # SIZE the filter to the eval set (r9): the fixed 2^21-bit default
-    # saturates near ~50% FPR at a million eval shingles, degrading
-    # the pre-screen to a pass-through (the exact verifier keeps
-    # results correct, but then sees half the corpus). ~10 bits/key
-    # holds ~1% FPR; capped at 2^28 bits (a ~4M-row broadcast word
-    # table at worst). The chosen size is persisted BEFORE the bloom:
-    # a crash between the two leaves meta-without-bloom, which fails
-    # the next delta loudly instead of probing at the wrong modulus
-    # (a rebuild heals either way — rebuilds are re-runnable).
-    n_keys = hh.count()
-    bits = BLOOM_BITS
-    while bits < 10 * n_keys and bits < (1 << 28):
-        bits <<= 1
-    with open(os.path.join(stage, "meta.json"), "w") as fh:
-        json.dump({"bits": bits, "n_keys": n_keys}, fh)
-    # positions hash the ALREADY-portable-hashed shingle (identity
-    # hasher), so probe-side work is one hash per shingle shared by
-    # the screen and the verifier
-    bloom_build(
-        hh, F.col("hk"), hasher=lambda c: c, bits=bits
-    ).write.mode("overwrite").parquet(os.path.join(stage, "bloom"))
-
-    # swap: old freeze aside, staging in, old freeze gone. A crash
-    # between the two renames leaves NO decon dir -> the next delta
-    # fails loudly (never a mixed-generation filter).
-    if os.path.isdir(decon_dir):
-        os.rename(decon_dir, old)
-    os.rename(stage, decon_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    with swap.writing():
+        hashes.write.mode("overwrite").parquet(
+            os.path.join(stage, "hashes")
+        )
+        hh = spark.read.parquet(os.path.join(stage, "hashes"))
+        # SIZE the filter to the eval set (r9): the fixed 2^21-bit
+        # default saturates near ~50% FPR at a million eval shingles,
+        # degrading the pre-screen to a pass-through (the exact
+        # verifier keeps results correct, but then sees half the
+        # corpus). ~10 bits/key holds ~1% FPR; capped at 2^28 bits (a
+        # ~4M-row broadcast word table at worst).
+        n_keys = hh.count()
+        bits = BLOOM_BITS
+        while bits < 10 * n_keys and bits < (1 << 28):
+            bits <<= 1
+        with open(os.path.join(stage, "meta.json"), "w") as fh:
+            json.dump({"bits": bits, "n_keys": n_keys}, fh)
+        # positions hash the ALREADY-portable-hashed shingle (identity
+        # hasher), so probe-side work is one hash per shingle shared by
+        # the screen and the verifier
+        bloom_build(
+            hh, F.col("hk"), hasher=lambda c: c, bits=bits
+        ).write.mode("overwrite").parquet(os.path.join(stage, "bloom"))
+    swap.commit()
 
 
 def _apply_decon(spark: SparkSession, df: DataFrame, decon_dir: str,

@@ -7,8 +7,10 @@ commit-on-success/rollback-on-error DB scopes. Spark equivalents:
 - stages: named callables over a shared context dict; every stage logged
   with wall-clock (the reference logs every stage).
 - txn scope: Spark writes are job-atomic via the output commit protocol;
-  multi-write pipelines emulate rollback with write-to-temp-then-swap
-  (operators/upsert.py does this for the merge writer).
+  a layer write stages its new copy and swaps it in through
+  sources/dirswap.py, which heals an interrupted swap on the next
+  write, so a failed run never loses a layer (upsert_parquet writes
+  the raw and cleaned layers this way).
 - idempotency: re-running a pipeline that ends in an upsert write leaves
   the data unchanged (tested in tests/test_pipeline.py).
 

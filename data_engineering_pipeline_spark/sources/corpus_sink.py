@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_pipeline_spark.sources.dirswap import DirSwap
+
 
 def write_corpus(
     df: DataFrame,
@@ -83,10 +85,10 @@ def compact_corpus(
 ) -> int:
     """Small-file compaction — the maintenance job every long-lived
     corpus needs once incremental appends accumulate: rewrite each hive
-    partition's many small files into few sorted ones, atomically
-    (write to `<path>.__compact__`, swap dirs, drop the old copy so a
-    crash at any point leaves a complete corpus on disk). Returns the
-    number of data files after compaction.
+    partition's many small files into few sorted ones, atomically (the
+    compacted copy is staged and swapped in through sources/dirswap.py,
+    which also heals an interrupted compaction before the corpus is
+    read). Returns the number of data files after compaction.
 
     Scale: one shuffle keyed by the partition columns (the same layout
     write as write_corpus); each partition rewrites independently, so
@@ -96,36 +98,26 @@ def compact_corpus(
     import os
     import shutil
 
+    swap = DirSwap(path)
     df = spark.read.parquet(path)
-    tmp = f"{path}.__compact__"
-    # NOT "<path>.__old__": recover_table (operators/upsert.py) sweeps
-    # the glob "<path>.__old__*", whose star matches the empty string —
-    # it would rmtree/restore a compaction remnant it does not
-    # understand if both tools ever touched the same path
-    old = f"{path}.__cold__"
     shuffled = (
         df.repartition(*[F.col(c) for c in partition_cols])
         if partition_cols
         else df.coalesce(max(df.rdd.getNumPartitions() // 8, 1))
     )
-    (
-        shuffled.sortWithinPartitions(*partition_cols, sort_col)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    # the read skips _-prefixed dirs, so carry the manifest forward
-    # explicitly (row counts are unchanged by compaction)
-    if os.path.isdir(f"{path}/_manifest"):
-        shutil.copytree(f"{path}/_manifest", f"{tmp}/_manifest")
-    # recoverable swap (same discipline as operators/upsert.py): the
-    # live path is missing only between the two renames, and both the
-    # old and new complete copies exist on disk until the final delete
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    with swap.writing():
+        (
+            shuffled.sortWithinPartitions(*partition_cols, sort_col)
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", target_records_per_file)
+            .partitionBy(*partition_cols)
+            .parquet(swap.stage)
+        )
+        # the read skips _-prefixed dirs, so carry the manifest forward
+        # explicitly (row counts are unchanged by compaction)
+        if os.path.isdir(f"{path}/_manifest"):
+            shutil.copytree(f"{path}/_manifest", f"{swap.stage}/_manifest")
+    swap.commit()
     # data files live exactly len(partition_cols) hive dirs deep (one
     # `col=value/` level per partition column; zero -> files at the
     # root) — a fixed one-level glob under- or over-counts otherwise
@@ -145,41 +137,3 @@ def compact_corpus(
             for part in os.path.relpath(f, path).split(os.sep)[:-1]
         )
     )
-
-
-def recover_corpus(path: str) -> str:
-    """Restore a corpus export to a consistent state after a crash in
-    compact_corpus's swap (single-writer). Returns
-    'clean' | 'finished_swap' | 'restored_old' | 'dropped_tmp'.
-    Mirrors operators/upsert.py recover_table: live present -> drop
-    remnants; live missing with a complete compacted copy (_SUCCESS)
-    -> finish the swap; else restore the old copy (re-run compaction)."""
-    import os
-    import shutil
-
-    tmp = f"{path}.__compact__"
-    # NOT "<path>.__old__": recover_table (operators/upsert.py) sweeps
-    # the glob "<path>.__old__*", whose star matches the empty string —
-    # it would rmtree/restore a compaction remnant it does not
-    # understand if both tools ever touched the same path
-    old = f"{path}.__cold__"
-    if os.path.isdir(path):
-        found = False
-        for d in (tmp, old):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-                found = True
-        return "finished_swap" if found else "clean"
-    if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        os.rename(tmp, path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        return "finished_swap"
-    if os.path.isdir(old):
-        os.rename(old, path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        return "restored_old"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    return "dropped_tmp"

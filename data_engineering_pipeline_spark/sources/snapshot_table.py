@@ -1,7 +1,7 @@
 """Transactional snapshot table: a minimal log-structured table format
 giving multi-writer safety, atomic commits, time travel, and file-level
 pruning on top of plain parquet — the capability gap VERDICT r5 ranked
-first for real users (the reference, like our upsert module, is
+first for real users (the reference, like operators/upsert.py, is
 single-writer by scope: database.py:60-71).
 
 Layout (the Delta-Lake/Iceberg architecture from the public papers,
@@ -26,8 +26,8 @@ two writers racing for the same version — exactly one O_EXCL create
 wins. The loser re-reads the log and retries against the new head:
 - append: always rebases cleanly (it removes nothing).
 - overwrite: replaces the whole head, rebases cleanly by definition.
-- compact / upsert (read-modify-write): valid only if the files they
-  read are all still live at the new head; otherwise the transaction
+- compact (read-modify-write): valid only if the files it read are
+  all still live at the new head; otherwise the transaction
   CONFLICTS and raises — the caller re-runs on fresh state. This is
   write-serializable: every committed version's removes were live in
   its parent.
@@ -1482,54 +1482,14 @@ class SnapshotTable:
             properties=properties,
         )
 
-    def upsert(self, df: DataFrame, keys: list[str], order_col: str) -> int:
-        """Copy-on-write merge (last-write-wins by order_col): reads
-        the current snapshot, merges, stages the result, and commits
-        only if the files it read are all still live — otherwise
-        SnapshotConflict (a concurrent writer changed the table under
-        the merge; re-run to merge against fresh state)."""
-        from data_engineering_pipeline_spark.operators.upsert import (
-            merge_last_write_wins,
-        )
-
-        head = self.latest_version()
-        cm_basis = self._colmap_token(head)
-        read_files = self._live_files() if head is not None else {}
-        cur_schema = self._schema_at(head) if head is not None else None
-        old = (
-            self._read_files(read_files, cur_schema) if read_files else None
-        )
-        # constraint gate on the incoming batch (the only new rows —
-        # the merged survivors from `old` pre-date the validated add)
-        df = self._apply_generated(df)
-        self._constraint_gate(df)
-        merged = merge_last_write_wins(old, df, keys, order_col)
-        adds = self._stage(merged)
-
-        basis = self._dv_state(read_files)
-
-        def removes(live: dict[str, dict]) -> list[str]:
-            now = self._dv_state(live)
-            if any(now.get(n) != v for n, v in basis.items()):
-                raise SnapshotConflict(
-                    "files read by this upsert were removed (or gained "
-                    "deletion vectors) under a concurrent commit; re-run "
-                    "against fresh state"
-                )
-            return sorted(basis)
-
-        return self._commit_loop("upsert", adds, removes,
-                                 schema=merged.schema,
-                                 colmap_basis=cm_basis)
-
     def compact(self, target_files: int = 1,
                 cluster_by: list[str] | None = None,
                 bits: int = 8,
                 target_bytes: int | None = None,
                 where: list | None = None) -> int | None:
         """Rewrite the current snapshot into `target_files` files —
-        the small-file cure for append-heavy tables. Conflicts like
-        upsert: commits only if its source files are all still live.
+        the small-file cure for append-heavy tables. Read-modify-write:
+        commits only if its source files are all still live.
 
         `target_bytes` sizes the rewrite by DATA instead: the file
         count becomes ceil(live bytes / target_bytes) — the way a
@@ -1743,8 +1703,8 @@ class SnapshotTable:
           2. a column-pruned scan of the surviving candidates' key
              columns, semi-joined with the source keys (keys-only
              shuffle), yields the touched-file list — bounded by file
-             count, same driver-side convention as
-             operators/upsert.py's partition listing;
+             count, same driver-side convention as the touched
+             partition values upsert_parquet collects;
           3. cow: only touched files are read in full and rewritten;
              mor: only the DV and the new rows are written. Untouched
              files stay byte-identical in the new version either way.
@@ -1753,7 +1713,7 @@ class SnapshotTable:
         candidate set it read is unchanged at commit time — a
         concurrent append could add a file containing a 'not matched'
         key, silently turning an insert into a duplicate, so unlike
-        upsert/compact even pure adds conflict (Delta documents the
+        compact even pure adds conflict (Delta documents the
         same merge/append conflict at its Serializable level).
 
         Duplicate keys in the SOURCE are rejected (same as Delta's

@@ -290,35 +290,23 @@ def upsert_sink(
 ) -> StreamingQuery:
     """writeStream.foreachBatch -> merge_last_write_wins per micro-batch.
     Replaying a batch converges to the same table state (idempotent).
-    With `partition_cols`, each micro-batch merges through the
-    partition-SCOPED upsert (dynamic partition overwrite): only the
-    partitions the batch touches are read or rewritten — the form that
-    holds up when the table is 100 TB and a micro-batch touches a few
-    partitions of it."""
+    With `partition_cols`, each micro-batch merges partition-scoped
+    (dynamic partition overwrite): only the partitions the batch
+    touches are read or rewritten — the form that holds up when the
+    table is 100 TB and a micro-batch touches a few partitions of it.
+    Each merge heals a previous run's interrupted swap before it reads
+    the table (sources/dirswap.py)."""
     from data_engineering_pipeline_spark.operators.upsert import (
-        recover_partitions,
-        recover_table,
         upsert_parquet,
-        upsert_parquet_scoped,
     )
-
-    # self-heal a previous run's interrupted swap — whole-table remnants
-    # (upsert_parquet) and partition-scoped remnants (upsert_parquet_scoped)
-    recover_table(path)
-    recover_partitions(path)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if partition_cols:
-            upsert_parquet_scoped(
-                batch_df.sparkSession, path, batch_df, keys, order_col,
-                partition_cols,
-            )
-        else:
-            upsert_parquet(
-                batch_df.sparkSession, path, batch_df, keys, order_col
-            )
+        upsert_parquet(
+            batch_df.sparkSession, path, batch_df, keys, order_col,
+            partition_cols,
+        )
 
     return (
         stream_df.writeStream.foreachBatch(_merge)

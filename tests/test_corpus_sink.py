@@ -88,8 +88,7 @@ def test_compact_corpus_reduces_files_preserves_data(spark, sf_smoke, tmp_path):
 
     n_after = compact_corpus(spark, out, ("lang",), "doc_id")
     assert n_after < n_before
-    assert not os.path.exists(f"{out}.__compact__")
-    assert not os.path.exists(f"{out}.__cold__")
+    assert not glob.glob(f"{out}.*")  # no stage, aside or record left
 
     after = sorted(
         tuple(r) for r in spark.read.parquet(out)
@@ -136,40 +135,6 @@ def test_compact_corpus_two_level_and_unpartitioned_globs(spark, sf_smoke, tmp_p
     assert 0 < n_flat < flat_before
     assert n_flat == len(glob.glob(f"{out0}/*.parquet"))
     assert spark.read.parquet(out0).count() == docs.count()
-
-
-def test_recover_corpus_crash_states(spark, sf_smoke, tmp_path):
-    """Crash at each point of compact_corpus's dir swap leaves a state
-    recover_corpus restores to a complete corpus."""
-    from data_engineering_pipeline_spark.sources.corpus_sink import (
-        compact_corpus,
-        recover_corpus,
-    )
-
-    docs = load_table(spark, sf_smoke, "documents")
-    out = str(tmp_path / "c")
-    write_corpus(docs, out, ("lang",), "doc_id", max_records_per_file=50)
-    n = spark.read.parquet(out).count()
-    assert recover_corpus(out) == "clean"
-
-    # crash between the two renames: live gone, complete compacted copy
-    docs.write.mode("overwrite").partitionBy("lang").parquet(
-        f"{out}.__compact__"
-    )
-    os.rename(out, f"{out}.__cold__")
-    assert recover_corpus(out) == "finished_swap"
-    assert spark.read.parquet(out).count() == n
-    assert not os.path.exists(f"{out}.__cold__")
-
-    # crash mid-compaction-write (no _SUCCESS): restore the old copy
-    os.makedirs(f"{out}.__compact__")
-    os.rename(out, f"{out}.__cold__")
-    assert recover_corpus(out) == "restored_old"
-    assert spark.read.parquet(out).count() == n
-
-    # and a completed compaction still works after recovery
-    assert compact_corpus(spark, out, ("lang",), "doc_id") > 0
-    assert spark.read.parquet(out).count() == n
 
 
 def test_write_corpus_empty_input(spark, tmp_path):

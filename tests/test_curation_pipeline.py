@@ -713,10 +713,10 @@ def test_curation_sink_streams_full_funnel(spark, tmp_path):
 
 def test_decon_refreeze_is_staged_and_atomic(spark, tmp_path):
     """r10 (ADVICE): a REFREEZE must never leave new hashes/meta paired
-    with the previous freeze's bloom. _freeze_decon now stages all
-    three artifacts and swaps with directory renames; leftover
-    staging/old debris from a crashed prior swap is cleaned up; after
-    a refreeze the three artifacts agree (meta.n_keys == hash count,
+    with the previous freeze's bloom. _freeze_decon stages all three
+    artifacts and swaps the dir in whole (a crash at every swap step is
+    swept in tests/test_dirswap.py); after a refreeze no remnant is
+    left and the three artifacts agree (meta.n_keys == hash count,
     apply drops docs contaminated by the NEW eval set only)."""
     import json
 
@@ -732,17 +732,12 @@ def test_decon_refreeze_is_staged_and_atomic(spark, tmp_path):
     _freeze_decon(spark, ev1, dd)
     n1 = json.load(open(os.path.join(dd, "meta.json")))["n_keys"]
 
-    # plant debris as if a prior refreeze crashed mid-swap
-    os.makedirs(os.path.join(dd + ".staging", "hashes"))
-    os.makedirs(os.path.join(dd + ".old", "bloom"))
-
     ev2 = spark.createDataFrame(
         [("alpha beta gamma delta",), ("zeta eta theta iota kappa",)],
         "text string",
     )
     _freeze_decon(spark, ev2, dd)
-    assert not os.path.exists(dd + ".staging")
-    assert not os.path.exists(dd + ".old")
+    assert os.listdir(tmp_path) == ["decon"]
     meta = json.load(open(os.path.join(dd, "meta.json")))
     n_hashes = spark.read.parquet(os.path.join(dd, "hashes")).count()
     assert meta["n_keys"] == n_hashes > n1  # the NEW freeze, coherent

@@ -74,6 +74,65 @@ def test_ingest_transform_end_to_end_idempotent(spark, tmp_path):
     assert ("ZAF", 2005) not in rows
 
 
+def test_crashed_layer_swap_is_not_lost_on_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A refresh that dies after the live layer was renamed aside but
+    before the merged copy was renamed in must not lose the layer: the
+    replayed refresh heals the swap first, so the raw layer keeps its
+    30 backfilled rows plus the new one, and no remnant is left beside
+    either layer."""
+    import os
+
+    import pytest
+
+    base = str(tmp_path)
+    years = range(2000, 2010)
+    countries = ("ZAF", "KEN", "NGA")
+    gdp = _records("NY.GDP.MKTP.KD.ZG",
+                   [(c, y, 1.0 + y % 5) for c in countries for y in years])
+    unemp = _records("SL.UEM.TOTL.ZS",
+                     [(c, y, 9.0) for c in countries for y in years]
+                     + [("ZAF", 2010, 9.5)])
+    assert ingest_pipeline(spark, "gdp_growth", gdp, base,
+                           fetched_at=TS).run()["counts"]["raw"] == 30
+    ingest_pipeline(spark, "unemployment", unemp, base, fetched_at=TS).run()
+    assert transform_pipeline(spark, base).run()["preview"]["total"] == 30
+
+    real_rename = os.rename
+
+    def crash_swap_in(live):
+        def rename(src, dst):
+            if os.path.abspath(dst) == os.path.abspath(live):
+                raise OSError("crash before the swap-in")
+            real_rename(src, dst)
+        return rename
+
+    def remnants(layer):
+        return [d for d in os.listdir(base) if d.startswith(layer + ".")]
+
+    refresh = _records("NY.GDP.MKTP.KD.ZG", [("ZAF", 2010, 4.0)])
+    ts2 = TS + dt.timedelta(days=1)
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename",
+                  crash_swap_in(os.path.join(base, "raw_gdp_growth")))
+        with pytest.raises(OSError, match="crash before the swap-in"):
+            ingest_pipeline(spark, "gdp_growth", refresh, base,
+                            fetched_at=ts2).run()
+    counts = ingest_pipeline(spark, "gdp_growth", refresh, base,
+                             fetched_at=ts2).run()["counts"]
+    assert counts["raw"] == 31
+    assert not remnants("raw_gdp_growth")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename",
+                  crash_swap_in(os.path.join(base, "cleaned_data")))
+        with pytest.raises(OSError, match="crash before the swap-in"):
+            transform_pipeline(spark, base).run()
+    assert transform_pipeline(spark, base).run()["preview"]["total"] == 31
+    assert not remnants("cleaned_data")
+
+
 def test_pack_greedy_rejects_null_and_negative_weights(spark):
     """r9 review: a NULL token count reached int(NaN) (cryptic crash
     mid-loop) and a NEGATIVE one silently shrank the running fill,

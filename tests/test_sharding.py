@@ -171,55 +171,6 @@ def test_refresh_shards_rebuilds_only_affected(spark, tmp_path):
     assert refresh_shards(src, out, 8, ["doc_id"])["rebuilt"] == []
 
 
-def test_recover_shards_crash_states(spark, tmp_path):
-    """Every crash window of the shard swap heals: aside-without-live
-    restores, aside-with-live drops, stale stage dirs sweep — and the
-    replayed refresh converges to the correct export."""
-    import os
-    import shutil
-
-    from data_engineering_pipeline_spark.operators.sharding import (
-        recover_shards,
-        refresh_shards,
-    )
-    from data_engineering_pipeline_spark.sources.snapshot_table import (
-        SnapshotTable,
-    )
-
-    src = SnapshotTable(spark, str(tmp_path / "src"))
-    src.append(_docs(spark, 200))
-    out = str(tmp_path / "out")
-    refresh_shards(src, out, 4, ["doc_id"])
-
-    # crash window 1: aside renamed, swap-in never happened
-    live = os.path.join(out, "shard=2")
-    aside = live + ".abc123.old"
-    os.rename(live, aside)
-    # crash window 2: a completed swap left its aside behind
-    live3 = os.path.join(out, "shard=3")
-    aside3 = live3 + ".def456.old"
-    shutil.copytree(live3, aside3)
-    # crash window 3: a stage dir from a dead writer
-    os.makedirs(os.path.join(out, ".stage-deadbeef", "shard=1"))
-
-    healed = recover_shards(out)
-    assert any(h.startswith("restored:shard=2") for h in healed)
-    assert any(h.startswith("dropped:") for h in healed)
-    assert any(h.startswith("swept:.stage-deadbeef") for h in healed)
-    assert os.path.isdir(live) and not os.path.exists(aside)
-    assert not os.path.exists(aside3)
-
-    # the full export is intact and refresh keeps working
-    assert spark.read.parquet(out).count() == 200
-    src.merge_into(
-        spark.createDataFrame([(7, "x")], "doc_id long, text string"),
-        ["doc_id"],
-    )
-    res = refresh_shards(src, out, 4, ["doc_id"])
-    assert res["rebuilt"]
-    assert spark.read.parquet(out).count() == 200
-
-
 def test_refresh_shards_survives_expired_watermark(spark, tmp_path):
     """Retention can expire the version the applied watermark points
     at; the refresh must fall back to a full rebuild instead of
@@ -283,15 +234,16 @@ def test_string_keys_shard_correctly(spark, tmp_path):
         shuffle_shard(docs, 4, F.col("doc_id")).select("shard").collect()
 
 
-def test_full_rebuild_stages_and_recovers(spark, tmp_path):
+def test_full_rebuild_stages_and_recovers(spark, tmp_path, monkeypatch):
     """A param-change full rebuild must not overwrite the live export
-    in place: a crash mid-rebuild keeps the pre-rebuild copy
-    recoverable (the staged dirs are siblings, healed by
-    recover_shards)."""
+    in place: when the staged rebuild fails, the pre-rebuild export
+    keeps serving and no stage is left beside it; the retried rebuild
+    round-trips. (A crash at every swap step is swept in
+    tests/test_dirswap.py.)"""
     import os
 
+    from data_engineering_pipeline_spark.operators import sharding
     from data_engineering_pipeline_spark.operators.sharding import (
-        recover_shards,
         refresh_shards,
     )
     from data_engineering_pipeline_spark.sources.snapshot_table import (
@@ -307,13 +259,24 @@ def test_full_rebuild_stages_and_recovers(spark, tmp_path):
     out = str(tmp_path / "shards")
     refresh_shards(t, out, 4, ["doc_id"])
     n_before = spark.read.parquet(out).count()
-    # simulate the crash window: live asided, fresh rebuild not yet in
-    os.rename(out, f"{out}.__rbold__deadbeef")
-    os.makedirs(f"{out}.__rbstage__cafebabe")
-    healed = recover_shards(out)
-    assert any(h.startswith("restored:") for h in healed)
-    assert any(h.startswith("swept:") for h in healed)
+
+    real_export = sharding.export_shards
+
+    def failing_export(*a, **kw):
+        real_export(*a, **kw)  # leave a staged export to clean up
+        raise RuntimeError("rebuild write failed")
+
+    monkeypatch.setattr(sharding, "export_shards", failing_export)
+    with pytest.raises(RuntimeError, match="rebuild write failed"):
+        refresh_shards(t, out, 8, ["doc_id"])
+    monkeypatch.undo()
+    assert sorted(
+        d for d in os.listdir(out) if d.startswith("shard=")
+    ) == [f"shard={k}" for k in range(4)]
     assert spark.read.parquet(out).count() == n_before
+    assert not [
+        d for d in os.listdir(tmp_path) if d.startswith("shards.")
+    ]
     # and a real param-change rebuild (n_shards 4 -> 8) round-trips
     res = refresh_shards(t, out, 8, ["doc_id"])
     assert res["rebuilt"] == list(range(8))

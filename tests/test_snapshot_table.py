@@ -47,22 +47,6 @@ def test_time_travel_and_overwrite_atomicity(spark, tmp_path):
         t.read(version=5)
 
 
-def test_upsert_merges_last_write_wins(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t3"))
-    base = spark.createDataFrame(
-        [(1, 10, "old"), (2, 10, "old")], "k long, ord long, tag string"
-    )
-    t.append(base)
-    newer = spark.createDataFrame(
-        [(2, 20, "new"), (3, 20, "new")], "k long, ord long, tag string"
-    )
-    t.upsert(newer, ["k"], "ord")
-    rows = {r.k: r.tag for r in t.read().collect()}
-    assert rows == {1: "old", 2: "new", 3: "new"}
-    # pre-merge snapshot intact
-    assert {r.tag for r in t.read(version=0).collect()} == {"old"}
-
-
 def test_concurrent_appends_all_commit(spark, tmp_path):
     """Racing writers: the O_EXCL commit gives each append a distinct
     version and no rows are lost."""
@@ -86,43 +70,6 @@ def test_concurrent_appends_all_commit(spark, tmp_path):
     assert not errs
     assert t.latest_version() == 4
     assert t.read().count() == 1 + 4 * 10
-
-
-def test_upsert_conflicts_with_concurrent_overwrite(spark, tmp_path):
-    """Read-modify-write loses the race: a concurrent overwrite removes
-    the files the upsert read -> SnapshotConflict, never a silent lost
-    update."""
-    path = str(tmp_path / "t5")
-    t = SnapshotTable(spark, path)
-    t.append(
-        spark.createDataFrame([(1, 1, "a")], "k long, ord long, tag string")
-    )
-
-    orig_stage = t._stage
-    fired = {}
-
-    def hooked(df):
-        staged = orig_stage(df)
-        if not fired:
-            fired["x"] = True
-            SnapshotTable(spark, path).overwrite(
-                spark.createDataFrame(
-                    [(9, 9, "other")], "k long, ord long, tag string"
-                )
-            )
-        return staged
-
-    t._stage = hooked
-    with pytest.raises(SnapshotConflict):
-        t.upsert(
-            spark.createDataFrame(
-                [(1, 2, "upd")], "k long, ord long, tag string"
-            ),
-            ["k"],
-            "ord",
-        )
-    # the winning overwrite is the head; no partial merge is visible
-    assert [r.tag for r in t.read().collect()] == ["other"]
 
 
 def test_uncommitted_files_invisible_and_vacuumed(spark, tmp_path):
@@ -1918,23 +1865,13 @@ def test_update_where_set_reads_pre_update_row(spark, tmp_path):
         assert rows == {1: (105, 10), 2: (50, 0)}, mode
 
 
-def test_constraints_gate_upsert_and_view_refresh(spark, tmp_path):
-    """The two write paths with their own staging — legacy upsert and
-    the join-view refresh — honor CHECK constraints too."""
+def test_constraints_gate_view_refresh(spark, tmp_path):
+    """The join-view refresh, a write path with its own staging, honors
+    CHECK constraints too."""
     from data_engineering_pipeline_spark.sources.snapshot_table import (
         ExpectationViolation,
         refresh_join,
     )
-
-    t = SnapshotTable(spark, str(tmp_path / "cu"))
-    t.append(spark.createDataFrame(
-        [(1, 1, "a")], "k long, ord long, tag string"
-    ))
-    t.add_constraint("k_pos", "k > 0")
-    with pytest.raises(ExpectationViolation):
-        t.upsert(spark.createDataFrame(
-            [(-2, 2, "bad")], "k long, ord long, tag string"
-        ), ["k"], "ord")
 
     a = SnapshotTable(spark, str(tmp_path / "cva"))
     b = SnapshotTable(spark, str(tmp_path / "cvb"))

@@ -274,10 +274,13 @@ def test_upsert_sink_partition_scoped(spark, tmp_path):
     assert glob.glob(f"{out}/lang=de/*.parquet")  # hive layout preserved
 
 
-def test_upsert_sink_self_heals_interrupted_swap(spark, tmp_path):
-    """A previous run crashed between the upsert renames (live table
-    missing, old-aside on disk): starting the sink recovers the table
-    first, then merges the stream on top of it."""
+def test_upsert_sink_self_heals_interrupted_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A previous run crashed between the upsert's renames (the live
+    table renamed aside, the merged copy not yet in): the sink's first
+    merge heals the table before it reads it, then merges the stream
+    on top, and leaves no remnant."""
     import os
     import time
 
@@ -290,7 +293,20 @@ def test_upsert_sink_self_heals_interrupted_swap(spark, tmp_path):
         [(1, "a", 1), (2, "b", 1)], "k long, v string, ver long"
     )
     upsert_parquet(spark, out, base, ["k"], "ver")
-    os.rename(out, f"{out}.__old__deadbeef")  # simulate mid-swap crash
+    real_rename = os.rename
+
+    def crash_swap_in(src, dst):
+        if dst == out:
+            raise OSError("crash before the swap-in")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_swap_in)
+        with pytest.raises(OSError, match="crash before the swap-in"):
+            upsert_parquet(spark, out, spark.createDataFrame(
+                [(3, "c", 1)], "k long, v string, ver long"
+            ), ["k"], "ver")
+    assert not os.path.exists(out)
 
     batch = spark.createDataFrame(
         [(1, "a2", 2)], "k long, v string, ver long"
@@ -312,8 +328,11 @@ def test_upsert_sink_self_heals_interrupted_swap(spark, tmp_path):
     q = upsert_sink(stream, out, ["k"], "ver", str(tmp_path / "heal_ck"))
     q.awaitTermination()
     rows = {r.k: (r.v, r.ver) for r in spark.read.parquet(out).collect()}
-    assert rows == {1: ("a2", 2), 2: ("b", 1)}  # recovered + merged
-    assert not os.path.exists(f"{out}.__old__deadbeef")
+    # the crashed merge rolled forward, then the stream merged
+    assert rows == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1)}
+    assert not [
+        d for d in os.listdir(tmp_path) if d.startswith("heal_out.")
+    ]
 
 
 def test_state_store_is_append_organized(spark, tmp_path, sf_smoke):

@@ -88,159 +88,21 @@ def test_partitioned_upsert_prunes_and_stays_idempotent(spark, tmp_path):
     assert scan.count() == 2
 
 
-def test_recover_table_every_crash_state(spark, tmp_path):
-    """Simulate a crash at each point of the upsert write-swap sequence
-    and assert recover_table restores a consistent, findable table."""
-    import os
-    import shutil
-
-    from data_engineering_pipeline_spark.operators.upsert import (
-        recover_table,
-        upsert_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1)], "k long, v string, ver long"
-    )
-    upsert_parquet(spark, path, base, ["k"], "ver")
-    assert recover_table(path) == "clean"
-
-    def rows():
-        return sorted(
-            tuple(r) for r in spark.read.parquet(path).collect()
-        )
-
-    committed = rows()
-    merged = spark.createDataFrame(
-        [(1, "a2", 2), (3, "c", 1)], "k long, v string, ver long"
-    )
-
-    # crash AFTER writing tmp, BEFORE any rename: live + complete tmp
-    merged.write.mode("overwrite").parquet(f"{path}.__tmp__dead1")
-    assert recover_table(path) == "finished_swap"  # remnants dropped
-    assert rows() == committed and not os.path.exists(f"{path}.__tmp__dead1")
-
-    # crash BETWEEN the renames: live missing, complete tmp + old aside
-    merged.write.mode("overwrite").parquet(f"{path}.__tmp__dead2")
-    os.rename(path, f"{path}.__old__dead2")
-    assert recover_table(path) == "finished_swap"
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == \
-        sorted(tuple(r) for r in merged.collect())
-    assert not os.path.exists(f"{path}.__old__dead2")
-
-    # crash mid-tmp-write (no _SUCCESS): restore the old table
-    upsert_parquet(spark, path, base, ["k"], "ver")
-    good = rows()
-    os.makedirs(f"{path}.__tmp__dead3")  # partial: no _SUCCESS marker
-    os.rename(path, f"{path}.__old__dead3")
-    assert recover_table(path) == "restored_old"
-    assert rows() == good
-    assert not os.path.exists(f"{path}.__tmp__dead3")
-
-    # nothing but a partial tmp: nothing to restore, drop the garbage
-    shutil.rmtree(path)
-    os.makedirs(f"{path}.__tmp__dead4")
-    assert recover_table(path) == "dropped_tmp"
-    assert not os.path.exists(path)
-
-
-def test_recover_partitions_every_crash_state(spark, tmp_path):
-    """Simulate a crash at each point of the partition-scoped
-    stage-then-swap and assert recover_partitions leaves every touched
-    partition as either its pre-batch or its merged copy — never lost."""
-    import os
-    import shutil
-
-    from data_engineering_pipeline_spark.operators.upsert import (
-        recover_partitions,
-        upsert_parquet_scoped,
-    )
-
-    path = str(tmp_path / "pt")
-    base = spark.createDataFrame(
-        [(1, "de", "a", 1), (2, "de", "b", 1), (3, "en", "c", 1)],
-        "k long, lang string, v string, ver long",
-    )
-    upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"])
-    assert recover_partitions(path) == "clean"
-
-    def rows():
-        return {
-            r.k: (r.lang, r.v, r.ver)
-            for r in spark.read.parquet(path).collect()
-        }
-
-    committed = rows()
-    merged_de = spark.createDataFrame(
-        [(1, "de", "a2", 2), (2, "de", "b", 1), (4, "de", "d", 1)],
-        "k long, lang string, v string, ver long",
-    )
-    after_merge = {**committed, 1: ("de", "a2", 2), 4: ("de", "d", 1)}
-
-    # crash AFTER the stage write committed (_SUCCESS), BEFORE any swap:
-    # roll forward — the merged de partition lands, en untouched
-    merged_de.write.mode("overwrite").partitionBy("lang").parquet(
-        f"{path}.__ptmp__dead1"
-    )
-    assert recover_partitions(path) == "finished_partition_swap"
-    assert rows() == after_merge
-    assert not os.path.exists(f"{path}.__ptmp__dead1")
-
-    # reset, then crash MID-SWAP: live de already renamed aside, stage
-    # still holds the merged de — roll forward finishes the swap
-    shutil.rmtree(path)
-    upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"])
-    merged_de.write.mode("overwrite").partitionBy("lang").parquet(
-        f"{path}.__ptmp__dead2"
-    )
-    os.makedirs(f"{path}.__pold__dead2")
-    os.rename(f"{path}/lang=de", f"{path}.__pold__dead2/lang=de")
-    assert recover_partitions(path) == "finished_partition_swap"
-    assert rows() == after_merge
-    assert not os.path.exists(f"{path}.__pold__dead2")
-
-    # reset, then crash MID-STAGE-WRITE (no _SUCCESS) with de asided:
-    # the merge never committed — roll back to the pre-batch partition
-    shutil.rmtree(path)
-    upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"])
-    os.makedirs(f"{path}.__ptmp__dead3/lang=de")
-    with open(f"{path}.__ptmp__dead3/lang=de/part-0.parquet", "w") as fh:
-        fh.write("partial")
-    os.makedirs(f"{path}.__pold__dead3")
-    os.rename(f"{path}/lang=de", f"{path}.__pold__dead3/lang=de")
-    assert recover_partitions(path) == "rolled_back_partition_swap"
-    assert rows() == committed
-    assert not os.path.exists(f"{path}.__ptmp__dead3")
-
-    # orphan aside with live intact (crash during cleanup): dropped
-    os.makedirs(f"{path}.__pold__dead4/lang=de")
-    with open(f"{path}.__pold__dead4/lang=de/part-0.parquet", "w") as fh:
-        fh.write("stale")
-    assert recover_partitions(path) == "finished_partition_swap"
-    assert rows() == committed
-    assert not os.path.exists(f"{path}.__pold__dead4")
-
-
 def test_scoped_upsert_leaves_no_remnants(spark, tmp_path):
     """A successful scoped upsert cleans up its staging and aside dirs."""
     import glob
-
-    from data_engineering_pipeline_spark.operators.upsert import (
-        upsert_parquet_scoped,
-    )
 
     path = str(tmp_path / "clean")
     base = spark.createDataFrame(
         [(1, "de", "a", 1), (3, "en", "c", 1)],
         "k long, lang string, v string, ver long",
     )
-    upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"])
+    upsert_parquet(spark, path, base, ["k"], "ver", ["lang"])
     batch = spark.createDataFrame(
         [(1, "de", "a2", 2)], "k long, lang string, v string, ver long"
     )
-    upsert_parquet_scoped(spark, path, batch, ["k"], "ver", ["lang"])
-    assert not glob.glob(f"{path}.__p*")
+    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
+    assert not glob.glob(f"{path}.*")
 
 
 def test_scoped_upsert_touches_only_batch_partitions(spark, tmp_path):
@@ -250,16 +112,12 @@ def test_scoped_upsert_touches_only_batch_partitions(spark, tmp_path):
     import glob
     import os
 
-    from data_engineering_pipeline_spark.operators.upsert import (
-        upsert_parquet_scoped,
-    )
-
     path = str(tmp_path / "scoped")
     base = spark.createDataFrame(
         [(1, "de", "a", 1), (2, "de", "b", 1), (3, "en", "c", 1)],
         "k long, lang string, v string, ver long",
     )
-    upsert_parquet_scoped(spark, path, base, ["k"], "ver", ["lang"])
+    upsert_parquet(spark, path, base, ["k"], "ver", ["lang"])
     en_files_before = {
         f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/*.parquet")
     }
@@ -269,7 +127,7 @@ def test_scoped_upsert_touches_only_batch_partitions(spark, tmp_path):
         [(1, "de", "a2", 2), (4, "de", "d", 1)],
         "k long, lang string, v string, ver long",
     )
-    upsert_parquet_scoped(spark, path, batch, ["k"], "ver", ["lang"])
+    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
     # untouched partition: identical files, untouched mtimes
     en_files_after = {
         f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/*.parquet")
@@ -287,7 +145,7 @@ def test_scoped_upsert_touches_only_batch_partitions(spark, tmp_path):
         4: ("de", "d", 1),
     }
     # idempotent: replaying the batch changes nothing
-    upsert_parquet_scoped(spark, path, batch, ["k"], "ver", ["lang"])
+    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
     assert {
         r.k: (r.lang, r.v, r.ver)
         for r in spark.read.parquet(path).collect()
@@ -300,21 +158,14 @@ def test_scoped_bootstrap_stages_and_empty_batch(spark, tmp_path):
     batch must no-op instead of raising on a None predicate."""
     import os
 
-    from data_engineering_pipeline_spark.operators.upsert import (
-        upsert_parquet_scoped,
-    )
-
     path = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, 1, "en"), (2, 1, "de")], "k long, ver long, lang string"
     )
-    n = upsert_parquet_scoped(spark, path, df, ["k"], "ver", ["lang"])
-    assert n == 2 and os.path.isdir(path)
-    assert not [
-        d for d in os.listdir(tmp_path) if "__tmp__" in d
-    ]  # staging cleaned up
+    n = upsert_parquet(spark, path, df, ["k"], "ver", ["lang"])
+    assert n == 2 and os.listdir(tmp_path) == ["t"]  # staging cleaned up
     empty = df.limit(0)
-    assert upsert_parquet_scoped(
+    assert upsert_parquet(
         spark, path, empty, ["k"], "ver", ["lang"]
     ) == 0
     assert spark.read.parquet(path).count() == 2
@@ -335,3 +186,33 @@ def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
     assert upsert_parquet(
         spark, path, empty, ["k"], "ver", ["lang"]
     ) == 0
+
+
+def test_failed_write_cleans_up(spark, tmp_path, monkeypatch):
+    """A staged write that raises inside upsert_parquet: the error
+    propagates, the live table is unchanged, and neither the stage dir
+    nor a commit record is left beside it."""
+    import glob
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, path, _df(spark, [("ZAF", 2015, 1.2, 100)]),
+                   ["country_iso3", "year"], "fetched_at")
+    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    real = DataFrameWriter.parquet
+
+    def failing(self, p, *a, **kw):
+        real(self, p, *a, **kw)  # leave staged files to clean up
+        raise RuntimeError("staged write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="staged write failed"):
+        upsert_parquet(spark, path, _df(spark, [("KEN", 2015, 3.4, 200)]),
+                       ["country_iso3", "year"], "fetched_at")
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(path).collect()
+    ) == before
+    assert not glob.glob(f"{path}.*")
