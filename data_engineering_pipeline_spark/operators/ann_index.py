@@ -87,15 +87,11 @@ def load_centroids(path: str, version: int | None = None,
                    ) -> list[list[float]]:
     """Centroids AS OF a committed version (head by default): resolve
     the sidecar name from the table property committed with the
-    assignments, then read that immutable sidecar. Falls back to the
-    legacy un-versioned centroids.json for pre-property indexes."""
+    assignments, then read that immutable sidecar. A table no build
+    has committed to has no centroids: []."""
     t = SnapshotTable(None, path)
     name = t.properties_at(version).get(CENTROIDS_PROP)
     if name is None:
-        legacy = os.path.join(_sidecar_dir(path), "centroids.json")
-        if os.path.exists(legacy):
-            with open(legacy) as fh:
-                return json.load(fh)
         return []
     with open(os.path.join(_sidecar_dir(path), name)) as fh:
         return json.load(fh)

@@ -789,7 +789,7 @@ def grid_cell(
     Quantizing only the first few dims is coarser than KMeans (more
     cross-cell misses on adversarial data) but the pairing machinery
     downstream is identical."""
-    from data_engineering_pipeline_spark.operators.zorder import grid_coord
+    from data_engineering_pipeline_spark.sources.zorder import grid_coord
 
     cells = 1 << bits
     cell = F.lit(0).cast("long")

@@ -399,19 +399,12 @@ def _apply_decon(spark: SparkSession, df: DataFrame, decon_dir: str,
         _exploded_shingles,
         portable_token_hash,
     )
-    from data_engineering_pipeline_spark.operators.sketch import (
-        BLOOM_BITS,
-        bloom_member,
-    )
+    from data_engineering_pipeline_spark.operators.sketch import bloom_member
 
     bloom = spark.read.parquet(os.path.join(decon_dir, "bloom"))
     evh = spark.read.parquet(os.path.join(decon_dir, "hashes"))
-    meta_path = os.path.join(decon_dir, "meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            bits = int(json.load(fh)["bits"])
-    else:
-        bits = BLOOM_BITS  # legacy freeze predating sized filters
+    with open(os.path.join(decon_dir, "meta.json")) as fh:
+        bits = int(json.load(fh)["bits"])
     sh = _exploded_shingles(
         df, "doc_id", "text", DECON_SHINGLE_K
     ).select(

@@ -36,14 +36,21 @@ from data_engineering_pipeline_spark.operators.similarity import (
     dot,
     norm,
 )
-from data_engineering_pipeline_spark.queries.search import (
-    _MMR_SIM_SCALE,
-    MMR_K,
-    RRF_ARM_DEPTH,
-    RRF_K,
-    RRF_SCALE,
-    RRF_TOP,
-)
+
+# Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) of
+# the lexical BM25 arm and the semantic cosine arm — the standard
+# hybrid-retrieval combiner. RRF contributions are SCALED-INTEGER
+# reciprocals (10^9 div (60 + rank)) so the fused score is exact int64
+# arithmetic: no float-sum ordering issues cross-engine, and the sum is
+# order-independent. Each arm's rank comes from its own engine-stable
+# ordering (rounded score desc, id). The graded queries
+# (queries/search.py) use the same constants.
+RRF_K = 60
+RRF_SCALE = 1_000_000_000
+RRF_ARM_DEPTH = 50
+RRF_TOP = 20
+MMR_K = 10
+_MMR_SIM_SCALE = 10_000_000  # 4-dp cosine -> exact int64 penalty
 
 
 def build_search_index(

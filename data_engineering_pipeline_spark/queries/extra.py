@@ -809,11 +809,11 @@ def _zorder_sql_terms(a_expr: str, b_expr: str, bits: int) -> str:
     """,
 )
 def op_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton (Z-order) key over two dimensions (operators/zorder.py) —
+    """Morton (Z-order) key over two dimensions (sources/zorder.py) —
     the layout key behind multi-dimensional data skipping. Pure bit
     arithmetic, identical in any engine; the layout write + measured
     file-skipping win are tested in tests/test_zorder.py."""
-    from data_engineering_pipeline_spark.operators.zorder import zorder_key
+    from data_engineering_pipeline_spark.sources.zorder import zorder_key
 
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
@@ -1710,7 +1710,7 @@ def op_snapshot_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_snapshot_prune_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-ORDER + box-pruned read end-to-end (operators/zorder.py via
+    """Z-ORDER + box-pruned read end-to-end (sources/zorder.py via
     SnapshotTable.compact(cluster_by), read(prune=ranges)): load
     orders, Z-order-compact on (o_custkey, o_totalprice), then read
     with BOTH columns' ranges as manifest prune predicates plus the

@@ -8,6 +8,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from data_engineering_pipeline_spark.operators.search import bm25_scores
+from data_engineering_pipeline_spark.plans.search_pipeline import (
+    _MMR_SIM_SCALE,
+    MMR_K,
+    RRF_ARM_DEPTH,
+    RRF_K,
+    RRF_SCALE,
+    RRF_TOP,
+)
 from data_engineering_pipeline_spark.sources import load_table
 
 QUERIES = {}
@@ -53,17 +61,9 @@ ORACLES["text-bm25"] = f"""
     ORDER BY score DESC, doc_id
 """
 
-# Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) of
-# the lexical BM25 arm and the semantic cosine arm — the standard
-# hybrid-retrieval combiner. RRF contributions are SCALED-INTEGER
-# reciprocals (10^9 div (60 + rank)) so the fused score is exact int64
-# arithmetic: no float-sum ordering issues cross-engine, and the sum is
-# order-independent. Each arm's rank comes from its own engine-stable
-# ordering (rounded score desc, id).
-RRF_K = 60
-RRF_SCALE = 1_000_000_000
-RRF_ARM_DEPTH = 50
-RRF_TOP = 20
+# Reciprocal-rank fusion of the lexical BM25 arm and the semantic
+# cosine arm; the constants live with the deployment pipeline
+# (plans/search_pipeline.py).
 _SEM_QUERY_VEC = 0  # vec_id used as the semantic query
 
 
@@ -189,10 +189,6 @@ ORACLES["search-hybrid-rrf"] = f"""
     FROM fused QUALIFY "rank" <= {RRF_TOP}
     ORDER BY "rank"
 """
-
-MMR_K = 10
-_MMR_SIM_SCALE = 10_000_000  # 4-dp cosine -> exact int64 penalty
-
 
 def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversity-aware rerank of the hybrid candidates: greedy maximal

@@ -26,11 +26,41 @@ two writers racing for the same version — exactly one O_EXCL create
 wins. The loser re-reads the log and retries against the new head:
 - append: always rebases cleanly (it removes nothing).
 - overwrite: replaces the whole head, rebases cleanly by definition.
-- compact (read-modify-write): valid only if the files it read are
-  all still live at the new head; otherwise the transaction
-  CONFLICTS and raises — the caller re-runs on fresh state. This is
-  write-serializable: every committed version's removes were live in
-  its parent.
+- the data-rewriting writers (merge_into, delete_where, update_where,
+  compact, purge_dvs) share one guard. A transaction CONFLICTS and
+  raises — the caller re-runs on fresh state — when, at the new head,
+  (a) a file it rewrites or masks is gone or carries different
+  deletion vectors than when it was read, (b) a file in its read set
+  is gone, or (c) it is serializable and the live file set changed
+  at all (a file added, removed or re-masked). The read set is
+  empty except for a merge-on-read delete, which keeps every file
+  its predicate scanned. Only MERGE
+  is serializable: a concurrent append could add a file holding a
+  'not matched' key, silently turning an insert into a duplicate, and
+  a concurrent DV commit could mask a row it matched (Delta documents
+  the same merge/append conflict at its Serializable level). The others are write-serializable — every
+  committed version's removes were live, with the DVs the writer
+  read, in its parent — so concurrent appends and DML on files they
+  never rewrite or mask rebase cleanly.
+- rename/drop column and add-constraint conflict with any concurrent
+  commit (their premise is the whole head).
+
+DML write modes: merge_into, delete_where and update_where take
+`mode`, with IDENTICAL read-side semantics either way:
+- 'cow' (copy-on-write, default): the files holding matched rows are
+  rewritten without them, plus the new rows. Best when matches
+  cluster in few files — the rewrite IS the footprint.
+- 'mor' (merge-on-read, deletion vectors): matched rows are masked by
+  one tiny (file, position) DV file that reads apply via anti-join;
+  NO data file is rewritten and the new rows append. Write IO is
+  bounded by the batch even when its matches scatter across every
+  file — the case where copy-on-write degenerates into a table
+  rewrite (a measured 64/64-file rewrite for a 1000-row scattered
+  merge). Reads pay the anti-join only on DV'd files until
+  compact()/purge_dvs()/maintain() materializes the masks away (Delta
+  DVs / Iceberg positional deletes, same lazy-compaction contract).
+Either way the new rows are written in the table's column types, and
+untouched files stay byte-identical in the new version.
 
 Crash safety: a writer dying before its commit leaves only unreferenced
 data files (invisible; removed by vacuum()). A writer dying after the
@@ -54,6 +84,7 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -613,22 +644,36 @@ class SnapshotTable:
                         }
         return live
 
-    def _stage(self, df: DataFrame) -> list[dict]:
-        """Write df's data files into data/ under a fresh uuid prefix.
-        Unreferenced until a manifest commits them — a crash here leaves
-        garbage for vacuum(), never a visible partial write."""
+    def _stage_files(self, df: DataFrame, prefix: str = "") -> list[str]:
+        """The one staging step of every write: Spark writes df into a
+        private `.stage-<token>` dir, its part files move into data/ as
+        `<prefix><token>-NNNNN.parquet`, and the stage dir is removed
+        whether the write succeeded or raised. Moved files stay
+        unreferenced until a manifest commits them — a crash here
+        leaves garbage for vacuum(), never a visible partial write.
+        Returns the moved paths."""
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f".stage-{token}")
-        df.write.mode("overwrite").parquet(tmp)
-        data = os.path.join(self.path, "data")
-        os.makedirs(data, exist_ok=True)
         moved = []
-        for i, f in enumerate(sorted(os.listdir(tmp))):
-            if f.endswith(".parquet"):
-                dst = os.path.join(data, f"{token}-{i:05d}.parquet")
-                os.rename(os.path.join(tmp, f), dst)
-                moved.append(dst)
-        shutil.rmtree(tmp)
+        try:
+            df.write.mode("overwrite").parquet(tmp)
+            data = os.path.join(self.path, "data")
+            os.makedirs(data, exist_ok=True)
+            for i, f in enumerate(sorted(os.listdir(tmp))):
+                if f.endswith(".parquet"):
+                    dst = os.path.join(
+                        data, f"{prefix}{token}-{i:05d}.parquet"
+                    )
+                    os.rename(os.path.join(tmp, f), dst)
+                    moved.append(dst)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return moved
+
+    def _stage(self, df: DataFrame) -> list[dict]:
+        """Stage df as data files and return their manifest adds
+        (row counts, stats, bloom sidecars written)."""
+        moved = self._stage_files(df)
         stats = _file_stats(moved, self._effective_stat_cols())
         bloom_cols = self._effective_bloom_cols()
         if bloom_cols and moved:
@@ -1145,45 +1190,6 @@ class SnapshotTable:
                 out[name] = e
         return out
 
-    def _stage_dv(self, dv: DataFrame) -> list[dict]:
-        """Stage a DELETION VECTOR file: (target data-file name, row
-        position) pairs marking rows logically deleted from still-live
-        files. DV files are tiny (the batch's footprint, keys-only
-        narrow) and live in data/ beside the files they mask — one
-        parquet per commit, invisible until its manifest lands, exactly
-        like data files. Returns manifest dv_adds entries."""
-        import pyarrow.parquet as pq
-
-        token = uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.path, f".stage-{token}")
-        dv.select("target", "pos").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        data = os.path.join(self.path, "data")
-        os.makedirs(data, exist_ok=True)
-        out = []
-        for i, f in enumerate(sorted(os.listdir(tmp))):
-            if not f.endswith(".parquet"):
-                continue
-            dst = os.path.join(data, f"dv-{token}-{i:05d}.parquet")
-            os.rename(os.path.join(tmp, f), dst)
-            tbl = pq.read_table(dst, columns=["target"])
-            # arrow-side unique: the python list is file-count bounded,
-            # never row-count bounded (a wide delete masks many rows
-            # but only ever as many files as the table has)
-            targets = sorted(
-                tbl.column("target").unique().to_pylist()
-            )
-            out.append(
-                {
-                    "path": os.path.basename(dst),
-                    "targets": targets,
-                    "rows": tbl.num_rows,
-                }
-            )
-        shutil.rmtree(tmp)
-        return out
-
     def _effective_cdf(self) -> bool:
         """Change-data-file capture on? Handle opt-in or the persisted
         `cdf` table property (so any handle keeps capturing once one
@@ -1193,34 +1199,6 @@ class SnapshotTable:
         if self.latest_version() is None:
             return False
         return self.properties_at().get("cdf", "") == "true"
-
-    def _stage_cdc(self, rows: DataFrame) -> list[dict]:
-        """Stage a CHANGE-DATA file (Delta's _change_data design): the
-        commit's own change rows — full row values plus _change_type —
-        written AT COMMIT TIME while the DML has them in hand, so the
-        change feed later reads exactly these rows instead of
-        re-deriving them by diffing the commit's (possibly huge)
-        churned files. Invisible until the manifest lands; never part
-        of the live set; lives and dies with its manifest."""
-        token = uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.path, f".stage-{token}")
-        rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-        data = os.path.join(self.path, "data")
-        os.makedirs(data, exist_ok=True)
-        out = []
-        for i, f in enumerate(sorted(os.listdir(tmp))):
-            if not f.endswith(".parquet"):
-                continue
-            dst = os.path.join(data, f"cdc-{token}-{i:05d}.parquet")
-            os.rename(os.path.join(tmp, f), dst)
-            import pyarrow.parquet as pq
-
-            out.append({
-                "path": os.path.basename(dst),
-                "rows": pq.ParquetFile(dst).metadata.num_rows,
-            })
-        shutil.rmtree(tmp)
-        return out
 
     def _try_commit(self, version: int, manifest: dict) -> bool:
         """The atomic heart: exactly one writer creates the version
@@ -1350,6 +1328,124 @@ class SnapshotTable:
             if self._try_commit(next_v, manifest):
                 return next_v
             # lost the race: loop re-reads the new head and re-validates
+
+    def _commit_dml(self, op: str, head: int, live: dict[str, dict],
+                    schema, rows: DataFrame | None = None,
+                    gate: DataFrame | None = None,
+                    masks: DataFrame | None = None,
+                    changes: list | None = None,
+                    rewrites=(), reads=(), serializable: bool = False,
+                    txn: tuple[str, int] | None = None) -> int:
+        """Stage and commit a data-rewriting transaction (merge,
+        delete, update, compact, purge) whose caller found its matches
+        in `live`, the file entries it read at `head`. Every frame is
+        written in `schema`'s column types, so no writer forks a
+        column's physical type across files (a SET expression turning
+        an int into a double, an int source merged into a bigint
+        column).
+
+        - `rows`: data rows to add.
+        - `gate`: the new rows no earlier commit validated (postimages,
+          inserts); they must pass the CHECK constraints before
+          anything stages.
+        - `masks`: rows whose `__file`/`__pos` coordinates (from
+          `_read_files(with_pos=True)`) become one DELETION VECTOR file
+          of (target, pos) pairs: tiny (the batch's footprint,
+          keys-only narrow), in data/ beside the files it masks and,
+          like a data file, invisible until its manifest lands. A DV
+          that masks nothing means the predicate matched nothing: no
+          version is committed and `head` comes back.
+        - `changes`: [(DataFrame, _change_type label)], captured when
+          change-data capture is on as one CHANGE-DATA file (Delta's
+          _change_data design): written at commit time while the DML
+          has the rows in hand, so the change feed reads exactly these
+          rows instead of diffing the commit's (possibly huge) churned
+          files. Never part of the live set; it lives and dies with
+          its manifest.
+
+        The conflict guard is the module docstring's one rule, built
+        from `rewrites` (the files this commit removes), the DV
+        targets, `reads` and `serializable`."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import functions as F
+
+        types = (
+            {f.name: f.dataType for f in schema.fields}
+            if schema is not None else {}
+        )
+
+        def typed(df: DataFrame) -> DataFrame:
+            if all(types.get(f.name, f.dataType) == f.dataType
+                   for f in df.schema.fields):
+                return df
+            return df.select(*[
+                F.col(c).cast(types[c]).alias(c) if c in types
+                else F.col(c)
+                for c in df.columns
+            ])
+
+        if gate is not None:
+            self._constraint_gate(typed(gate))
+        dv_adds = []
+        if masks is not None:
+            dv = masks.select(
+                F.col("__file").alias("target"),
+                F.col("__pos").alias("pos"),
+            )
+            for p in self._stage_files(dv.coalesce(1), "dv-"):
+                tbl = pq.read_table(p, columns=["target"])
+                if not tbl.num_rows:
+                    os.remove(p)
+                    continue
+                # arrow-side unique: the python list is file-count
+                # bounded, never row-count bounded (a wide delete masks
+                # many rows but only ever as many files as the table has)
+                dv_adds.append({
+                    "path": os.path.basename(p),
+                    "targets": sorted(
+                        tbl.column("target").unique().to_pylist()
+                    ),
+                    "rows": tbl.num_rows,
+                })
+            if not dv_adds:
+                return head
+        adds = self._stage(typed(rows)) if rows is not None else []
+        cdc_adds = None
+        if changes and self._effective_cdf():
+            cdc = None
+            for df, label in changes:
+                lab = typed(df).withColumn("_change_type", F.lit(label))
+                cdc = lab if cdc is None else cdc.unionByName(
+                    lab, allowMissingColumns=True
+                )
+            cdc_adds = [
+                {"path": os.path.basename(p),
+                 "rows": pq.ParquetFile(p).metadata.num_rows}
+                for p in self._stage_files(cdc.coalesce(1), "cdc-")
+            ]
+
+        guarded = set(rewrites) | {t for d in dv_adds for t in d["targets"]}
+        basis = self._dv_state({
+            n: e for n, e in live.items() if serializable or n in guarded
+        })
+        reads = set(reads)
+        removes = sorted(rewrites)
+
+        def guard(now: dict[str, dict]) -> list[str]:
+            now_dv = self._dv_state(now)
+            if (any(now_dv.get(n) != v for n, v in basis.items())
+                    or not reads <= now.keys()
+                    or (serializable and now.keys() != basis.keys())):
+                raise SnapshotConflict(
+                    f"{op}: files this transaction read, rewrites or "
+                    "masks changed under a concurrent commit; re-run"
+                )
+            return removes
+
+        return self._commit_loop(
+            op, adds, guard, schema=schema, txn=txn, dv_adds=dv_adds,
+            cdc_adds=cdc_adds, colmap_basis=self._colmap_token(head),
+        )
 
     def append(self, df: DataFrame, txn: tuple[str, int] | None = None,
                expect: list[Expectation] | None = None,
@@ -1522,7 +1618,7 @@ class SnapshotTable:
         clustering request — already optimal)."""
         from pyspark.sql import functions as F
 
-        from data_engineering_pipeline_spark.operators.zorder import (
+        from data_engineering_pipeline_spark.sources.zorder import (
             grid_coord,
             zorder_key,
         )
@@ -1530,7 +1626,6 @@ class SnapshotTable:
         head = self.latest_version()
         if head is None:
             raise ValueError("cannot compact an empty table")
-        cm_basis = self._colmap_token(head)
         read_files = self._live_files()
         if where:
             read_files = self._apply_prunes(read_files, where, None, head)
@@ -1607,57 +1702,26 @@ class SnapshotTable:
                 df = df.coalesce(target_files)
         else:
             df = df.coalesce(target_files)
-        adds = self._stage(df)
-        basis = self._dv_state(read_files)
+        return self._commit_dml("compact", head, read_files, df.schema,
+                                rows=df, rewrites=read_files)
 
-        def removes(live: dict[str, dict]) -> list[str]:
-            now = self._dv_state(live)
-            if any(now.get(n) != v for n, v in basis.items()):
-                raise SnapshotConflict(
-                    "compaction source files were removed (or gained "
-                    "deletion vectors) under a concurrent commit; re-run"
-                )
-            return sorted(basis)
-
-        return self._commit_loop("compact", adds, removes,
-                                 schema=df.schema,
-                                 colmap_basis=cm_basis)
-
-    def purge_dvs(self, output_files: int | None = None) -> int | None:
+    def purge_dvs(self) -> int | None:
         """Materialize deletion-vector masks away by rewriting ONLY
         the files that carry DVs — the targeted half of compact() for
         merge-on-read tables: a 100 TB table with masks on 0.1% of its
         files rewrites that 0.1%, not the table (Delta's REORG TABLE
         ... APPLY (PURGE)). Returns the committed version, or None if
-        no live file carries a DV. Conflicts like compact, scoped to
-        the DV'd files: concurrent appends and DML on OTHER files
-        rebase cleanly."""
+        no live file carries a DV."""
         head = self.latest_version()
         if head is None:
             return None
-        cm_basis = self._colmap_token(head)
-        live = self._live_files()
-        dvd = {n: e for n, e in live.items() if e.get("dvs")}
+        dvd = {n: e for n, e in self._live_files().items() if e.get("dvs")}
         if not dvd:
             return None
         schema = self._schema_at(head)
-        clean = self._read_files(dvd, schema).coalesce(
-            output_files or max(1, len(dvd))
-        )
-        adds = self._stage(clean)
-        basis = self._dv_state(dvd)
-
-        def removes(now: dict[str, dict]) -> list[str]:
-            now_dv = self._dv_state(now)
-            if any(now_dv.get(n) != v for n, v in basis.items()):
-                raise SnapshotConflict(
-                    "files being purged changed under a concurrent "
-                    "commit; re-run"
-                )
-            return sorted(basis)
-
-        return self._commit_loop("purge", adds, removes, schema=schema,
-                                 colmap_basis=cm_basis)
+        clean = self._read_files(dvd, schema).coalesce(len(dvd))
+        return self._commit_dml("purge", head, dvd, schema, rows=clean,
+                                rewrites=dvd)
 
     def merge_into(
         self,
@@ -1665,7 +1729,6 @@ class SnapshotTable:
         keys: list[str],
         when_matched: str = "update",
         insert_not_matched: bool = True,
-        output_files: int | None = None,
         txn: tuple[str, int] | None = None,
         dedupe_source: str | None = None,
         mode: str = "cow",
@@ -1680,21 +1743,8 @@ class SnapshotTable:
           insert_not_matched     source rows matching no target key
                                  are appended
 
-        Two write strategies with IDENTICAL read-side semantics:
-          mode='cow'  (copy-on-write, default): touched files are
-             rewritten without their matched rows. Best when a batch's
-             keys cluster in few files — the rewrite IS the footprint.
-          mode='mor'  (merge-on-read, deletion vectors): matched rows
-             are masked by a tiny (file, position) DV file applied at
-             read time via anti-join; NO data file is rewritten, new
-             rows (postimages + inserts) append. This bounds write IO
-             by the BATCH even when its keys scatter across every file
-             — the case where copy-on-write degenerates into a table
-             rewrite (a measured 64/64-file rewrite for a 1000-row
-             scattered merge, BASELINE addendum 5). Reads pay the
-             anti-join only on DV'd files until compact()/maintain()
-             materializes the masks away (Delta DVs / Iceberg
-             positional deletes, same lazy-compaction contract).
+        `mode` is 'cow' or 'mor' (the module docstring's DML write
+        modes); the new rows are the matched postimages and inserts.
 
         Plan shape, in order of cheapness:
           1. manifest stat-prune: files whose [min,max] on keys[0]
@@ -1709,12 +1759,8 @@ class SnapshotTable:
              mor: only the DV and the new rows are written. Untouched
              files stay byte-identical in the new version either way.
 
-        Isolation is SERIALIZABLE: the commit is valid only if the
-        candidate set it read is unchanged at commit time — a
-        concurrent append could add a file containing a 'not matched'
-        key, silently turning an insert into a duplicate, so unlike
-        compact even pure adds conflict (Delta documents the
-        same merge/append conflict at its Serializable level).
+        Isolation is SERIALIZABLE (the module docstring's guard): even
+        a concurrent pure append conflicts.
 
         Duplicate keys in the SOURCE are rejected (same as Delta's
         'multiple source rows matched'): with when_matched='update'
@@ -1747,7 +1793,6 @@ class SnapshotTable:
                 .drop("__rn")
             )
         head = self.latest_version()
-        cm_basis = self._colmap_token(head)
         if head is None:
             if not insert_not_matched:
                 raise ValueError("merge into an empty table inserts "
@@ -1975,11 +2020,8 @@ class SnapshotTable:
                 from pyspark.sql import Observation
 
                 obs = Observation(f"merge_touched_{uuid.uuid4().hex[:8]}")
-                matched_pos = matched.select(
-                    F.col("__file").alias("target"),
-                    F.col("__pos").alias("pos"),
-                ).observe(
-                    obs, F.collect_set("target").alias("t")
+                matched_pos = matched.select("__file", "__pos").observe(
+                    obs, F.collect_set("__file").alias("t")
                 ).localCheckpoint()
                 touched = set(obs.get["t"])
             else:
@@ -1988,182 +2030,94 @@ class SnapshotTable:
                     for r in matched.select("__file").distinct().collect()
                 }
 
-        basis = self._dv_state(live)
-
-        def removes_guard(rm: list[str]):
-            def removes(live_now: dict[str, dict]) -> list[str]:
-                if self._dv_state(live_now) != basis:
-                    raise SnapshotConflict(
-                        "table changed since this merge read it "
-                        "(serializable merge conflicts even with "
-                        "concurrent appends or deletion-vector commits "
-                        "— either can invalidate the matched / "
-                        "not-matched sets); re-run"
-                    )
-                return rm
-
-            return removes
-
-        def inserts_of() -> DataFrame | None:
-            if not insert_not_matched:
-                return None
-            if not candidates:
-                return source
-            existing_keys = self._read_files(
-                candidates, cur_schema
-            ).select(*keys)
-            return source.join(existing_keys, keys, "left_anti")
-
-        if mode == "mor":
-            # 3b. write the DV + the new rows; rewrite NOTHING
-            parts = []
-            if touched and when_matched == "update":
-                existing_keys = self._read_files(
-                    candidates, cur_schema
-                ).select(*keys)
-                parts.append(source.join(existing_keys, keys, "left_semi"))
-            ins = inserts_of()
-            if ins is not None:
-                parts.append(ins)
-            adds: list[dict] = []
-            out_schema = source.schema
-            if parts:
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                self._constraint_gate(out)
-                # cow coerces source types through its union with the
-                # table's own rows; mor has no table rows in its union,
-                # so align explicitly to the POST-MERGE schema (int
-                # source into a bigint column must not fork the file
-                # types; a WIDER source must not be downcast into the
-                # pre-widening type — it widens the table instead)
-                if cur_schema is not None:
-                    eff = _merge_schemas(cur_schema, out.schema)
-                    tbl = {f.name: f.dataType for f in eff.fields}
-                    out = out.select(
-                        *[
-                            F.col(c).cast(tbl[c]).alias(c)
-                            if c in tbl else F.col(c)
-                            for c in out.columns
-                        ]
-                    )
-                out = out.coalesce(output_files or 1)
-                adds = self._stage(out)
-                out_schema = out.schema
-            dv_adds = (
-                self._stage_dv(matched_pos) if touched else []
-            )
-            if not adds and not dv_adds:
-                return head  # nothing matched, nothing to insert
-            cdc_parts = []
-            if touched:
-                # CDF preimages need the matched rows' full values —
-                # the one read the plain MoR merge never does (it only
-                # masks coordinates); an opt-in, batch-bounded cost
-                pre = self._read_files(
-                    {n: live[n] for n in touched}, cur_schema
-                ).join(src_keys, keys, "left_semi")
-                cdc_parts.append((
-                    pre,
-                    "update_preimage" if when_matched == "update"
-                    else "delete",
-                ))
-                if when_matched == "update":
-                    tgt_ks = self._read_files(
-                        {n: live[n] for n in touched}, cur_schema
-                    ).select(*keys)
-                    cdc_parts.append((
-                        source.join(tgt_ks, keys, "left_semi"),
-                        "update_postimage",
-                    ))
-            if ins is not None:
-                cdc_parts.append((ins, "insert"))
-            cdc_adds = self._cdc_of(cdc_parts)
-            return self._commit_loop(
-                "merge", adds, removes_guard([]),
-                schema=out_schema, txn=txn, dv_adds=dv_adds,
-                cdc_adds=cdc_adds, colmap_basis=cm_basis,
+        def union(dfs: list[DataFrame]) -> DataFrame:
+            # allowMissingColumns: an EVOLVED source (extra columns)
+            # merges additively — kept target rows read the new columns
+            # as null, the same contract append evolution gives. The
+            # reverse (source LACKING target columns when its rows are
+            # written) is rejected up front, never silently nulled.
+            return reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                dfs,
             )
 
-        # 3. cow: rewrite touched files only
-        parts = []
+        # the NEW rows (matched postimages + inserts) and the change
+        # rows, alike in both modes
+        news: list[DataFrame] = []
+        changes: list = []
         if touched:
             touched_df = self._read_files(
                 {n: live[n] for n in touched}, cur_schema
             )
-            kept = touched_df.join(src_keys, keys, "left_anti")
-            parts.append(kept)
-            if when_matched == "update":
-                matched_src = source.join(
-                    touched_df.select(*keys), keys, "left_semi"
-                )
-                parts.append(matched_src)
-        ins = inserts_of()
-        if ins is not None:
-            parts.append(ins)
-        if not parts:
-            return head  # delete-only merge with no matches: no-op
-        # constraint gate on the NEW rows only (matched postimages +
-        # inserts); the kept rows pre-date the constraint's validated
-        # add and re-checking them would re-scan touched files
-        news = parts[1:] if touched else parts
-        if news:
-            gate = news[0]
-            for p in news[1:]:
-                gate = gate.unionByName(p, allowMissingColumns=True)
-            self._constraint_gate(gate)
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns: an EVOLVED source (extra columns)
-            # merges additively — kept target rows read the new
-            # columns as null, the same contract append evolution
-            # gives. The reverse (source LACKING target columns when
-            # its rows are written) is rejected up front, never
-            # silently nulled.
-            out = out.unionByName(p, allowMissingColumns=True)
-        # the rewrite is sized like its input: a merge that touched 2
-        # files writes ~2 files, not one per shuffle partition (which
-        # turns every small merge into a small-file factory).
-        # insert-heavy merges can override via output_files.
-        out = out.coalesce(output_files or max(1, len(touched)))
-        adds = self._stage(out)
-
-        cdc_parts = []
-        if touched:
-            cdc_parts.append((
+            changes.append((
                 touched_df.join(src_keys, keys, "left_semi"),
                 "update_preimage" if when_matched == "update"
                 else "delete",
             ))
             if when_matched == "update":
-                cdc_parts.append((matched_src, "update_postimage"))
-        if ins is not None:
-            cdc_parts.append((ins, "insert"))
-        cdc_adds = self._cdc_of(cdc_parts)
-        return self._commit_loop(
-            "merge", adds, removes_guard(sorted(touched)),
-            schema=out.schema, txn=txn, cdc_adds=cdc_adds,
-            colmap_basis=cm_basis,
+                # cow joins the keys of the files it rewrites anyway;
+                # mor the candidate keys its insert anti-join reads
+                # (the same rows: only touched files hold matches)
+                hit = touched_df if mode == "cow" else self._read_files(
+                    candidates, cur_schema
+                )
+                post = source.join(hit.select(*keys), keys, "left_semi")
+                news.append(post)
+                changes.append((post, "update_postimage"))
+        if insert_not_matched:
+            ins = source
+            if candidates:
+                ins = source.join(
+                    self._read_files(candidates, cur_schema).select(*keys),
+                    keys, "left_anti",
+                )
+            news.append(ins)
+            changes.append((ins, "insert"))
+        if not touched and not news:
+            return head  # delete-only merge with no matches: no-op
+
+        if mode == "mor":
+            # 3b. mask the matched rows, append the new ones; rewrite
+            # NOTHING
+            rows = union(news).coalesce(1) if news else None
+            masks = matched_pos if touched else None
+            rewrites: set[str] = set()
+        else:
+            # 3. cow: rewrite touched files only, sized like their
+            # input — a merge that touched 2 files writes ~2 files, not
+            # one per shuffle partition (a small-file factory)
+            kept = [touched_df.join(src_keys, keys, "left_anti")
+                    ] if touched else []
+            rows = union(kept + news).coalesce(max(1, len(touched)))
+            masks = None
+            rewrites = touched
+        # the rows are written in the POST-merge types: an int source
+        # into a bigint column must not fork the file types; a WIDER
+        # source widens the table instead of being downcast
+        written = (rows if rows is not None else source).schema
+        schema = (
+            _merge_schemas(cur_schema, written)
+            if cur_schema is not None else written
+        )
+        # the constraint gate checks the NEW rows only; the kept rows
+        # of rewritten files pre-date the constraint's validated add
+        # and re-checking them would re-scan touched files
+        return self._commit_dml(
+            "merge", head, live, schema, rows=rows,
+            gate=union(news) if news else None, masks=masks,
+            changes=changes, rewrites=rewrites, serializable=True,
+            txn=txn,
         )
 
-    def delete_where(self, condition: str,
-                     output_files: int | None = None,
-                     mode: str = "cow",
+    def delete_where(self, condition: str, mode: str = "cow",
                      prune_hint: list | None = None) -> int:
         """DELETE WHERE: predicate delete that touches ONLY the files
         actually containing matching rows — one column-pruned pass
         with the parquet metadata columns finds them; every other file
         stays byte-identical in the new version. Rows where the
         condition is NULL are kept (SQL three-valued semantics); a
-        no-match delete commits nothing.
-
-        mode='cow' rewrites the touched files without their matched
-        rows; mode='mor' writes one tiny (file, position) deletion
-        vector instead and rewrites NOTHING — the path for a
-        scattered-predicate delete on a huge table (write IO bounded
-        by matched rows, reads pay an anti-join on DV'd files until
-        compaction).
+        no-match delete commits nothing. `mode` is 'cow' or 'mor' (the
+        module docstring's DML write modes).
 
         `prune_hint`: optional (col, values) / (col, lo, hi)
         predicates that must be IMPLIED by `condition` (every matching
@@ -2172,66 +2126,29 @@ class SnapshotTable:
         the point-delete path on a huge table. CONTRACT (the same one
         Delta's replaceWhere carries): a hint the condition does not
         imply can silently skip matching rows; the hint narrows IO,
-        the condition alone decides semantics.
-
-        Conflicts like compact: valid only if the files it read are
-        all still live — with unchanged DV sets — at commit
-        (concurrent appends rebase cleanly; a predicate delete makes
-        no claim about rows it never saw)."""
-        from pyspark.sql import functions as F
-
+        the condition alone decides semantics."""
         if mode not in ("cow", "mor"):
             raise ValueError("mode must be 'cow' or 'mor'")
         head = self.latest_version()
         if head is None:
             raise ValueError("cannot delete from an empty table")
-        cm_basis = self._colmap_token(head)
         live = self._live_files()
+        n_live = len(live)
         schema = self._schema_at(head)
         if prune_hint:
             live = self._apply_prunes(live, prune_hint, prune_hint,
                                       head)
-        self.last_dml_stats = {
-            "live": len(self._live_files()), "scanned": len(live),
-        }
+        self.last_dml_stats = {"live": n_live, "scanned": len(live)}
         if not live:
             return head  # hint proves no file can match: no-op
-        tagged = self._read_files(live, schema, with_pos=True)
-        matched = tagged.filter(condition)
+        matched = self._read_files(
+            live, schema, with_pos=True
+        ).filter(condition)
+        changes = [(matched.drop("__file", "__pos"), "delete")]
         if mode == "mor":
-            dv_adds = self._stage_dv(
-                matched.select(
-                    F.col("__file").alias("target"),
-                    F.col("__pos").alias("pos"),
-                )
-            )
-            if not dv_adds or not dv_adds[0]["rows"]:
-                return head  # nothing matches: no-op, no new version
-            cdc_adds = self._cdc_of(
-                [(matched.drop("__file", "__pos"), "delete")]
-            )
-            basis = self._dv_state(live)
-
-            def removes_mor(now: dict[str, dict]) -> list[str]:
-                now_dv = self._dv_state(now)
-                changed = {
-                    n for n, v in basis.items()
-                    if now_dv.get(n) != v
-                }
-                if changed & {
-                    t for d in dv_adds for t in d["targets"]
-                } or not set(basis) <= set(now):
-                    raise SnapshotConflict(
-                        "files masked by this delete changed under a "
-                        "concurrent commit; re-run"
-                    )
-                return []
-
-            return self._commit_loop("delete", [], removes_mor,
-                                     colmap_basis=cm_basis,
-                                     schema=schema, dv_adds=dv_adds,
-                                     cdc_adds=cdc_adds)
-
+            return self._commit_dml("delete", head, live, schema,
+                                    masks=matched, changes=changes,
+                                    reads=live)
         touched = {
             r["__file"]
             for r in matched.select("__file").distinct().collect()
@@ -2241,29 +2158,12 @@ class SnapshotTable:
         kept = (
             self._read_files({n: live[n] for n in touched}, schema)
             .filter(f"NOT coalesce(({condition}), false)")
-            .coalesce(output_files or max(1, len(touched)))
+            .coalesce(len(touched))
         )
-        adds = self._stage(kept)
-        cdc_adds = self._cdc_of(
-            [(matched.drop("__file", "__pos"), "delete")]
-        )
-        basis = self._dv_state({n: live[n] for n in touched})
-
-        def removes(now: dict[str, dict]) -> list[str]:
-            now_dv = self._dv_state(now)
-            if any(now_dv.get(n) != v for n, v in basis.items()):
-                raise SnapshotConflict(
-                    "files read by this delete were removed (or gained "
-                    "deletion vectors) under a concurrent commit; re-run"
-                )
-            return sorted(basis)
-
-        return self._commit_loop("delete", adds, removes,
-                                 schema=schema, cdc_adds=cdc_adds,
-                                 colmap_basis=cm_basis)
+        return self._commit_dml("delete", head, live, schema, rows=kept,
+                                changes=changes, rewrites=touched)
 
     def update_where(self, condition: str, assignments: dict[str, str],
-                     output_files: int | None = None,
                      mode: str = "cow",
                      prune_hint: list | None = None) -> int:
         """UPDATE ... SET ... WHERE: predicate update touching only
@@ -2271,12 +2171,10 @@ class SnapshotTable:
         delete_where). `assignments` maps column -> SQL expression,
         applied only where `condition` is TRUE; NULL/false rows keep
         their values. Assigned columns must already exist (schema
-        evolution happens through append/overwrite, not UPDATE).
-
-        mode='cow' rewrites the touched files in place; mode='mor'
-        masks the matched rows with a deletion vector and APPENDS
-        their updated images — write IO bounded by matched rows even
-        when they scatter across the whole table.
+        evolution happens through append/overwrite, not UPDATE), and a
+        SET result is stored in its column's type. `mode` is 'cow' or
+        'mor' (the module docstring's DML write modes); the new rows
+        are the matched rows' updated images.
 
         `prune_hint`: same contract as delete_where — predicates the
         condition IMPLIES, used for stat + bloom file-pruning of the
@@ -2289,87 +2187,46 @@ class SnapshotTable:
         head = self.latest_version()
         if head is None:
             raise ValueError("cannot update an empty table")
-        cm_basis = self._colmap_token(head)
         schema = self._schema_at(head)
+        live = self._live_files()
+        n_live = len(live)
         cols = (
             [f.name for f in schema.fields] if schema is not None
-            else self._df_for(self._live_files()).columns
+            else self._df_for(live).columns
         )
         missing = [c for c in assignments if c not in cols]
         if missing:
             raise ValueError(f"unknown columns in SET: {missing}")
-        live = self._live_files()
         if prune_hint:
             live = self._apply_prunes(live, prune_hint, prune_hint,
                                       head)
-        self.last_dml_stats = {
-            "live": len(self._live_files()), "scanned": len(live),
-        }
+        self.last_dml_stats = {"live": n_live, "scanned": len(live)}
         if not live:
             return head  # hint proves no file can match: no-op
-        tagged = self._read_files(live, schema, with_pos=True)
-        matched = tagged.filter(condition)
-
+        matched = self._read_files(
+            live, schema, with_pos=True
+        ).filter(condition)
         if mode == "mor":
             # pin the matched rows (batch-sized) so postimage staging
             # and DV staging share one scan of the table
             matched = matched.localCheckpoint()
-            # one select: every SET expression evaluates against the
-            # PRE-update row (SQL UPDATE), never a half-assigned one
-            post = matched.select(
-                *[
-                    F.expr(assignments[c]).alias(c)
-                    if c in assignments else F.col(c)
-                    for c in matched.columns
-                ]
-            )
-            post = post.drop("__file", "__pos")
-            if schema is not None:
-                # a SET expression must not fork the column's type
-                # across files (e.g. int arithmetic widening to bigint)
-                tbl = {f.name: f.dataType for f in schema.fields}
-                post = post.select(
-                    *[
-                        F.col(c).cast(tbl[c]).alias(c)
-                        if c in tbl else F.col(c)
-                        for c in post.columns
-                    ]
-                )
-            post = post.coalesce(output_files or 1)
-            self._constraint_gate(post)
-            adds = self._stage(post)
-            dv_adds = self._stage_dv(
-                matched.select(
-                    F.col("__file").alias("target"),
-                    F.col("__pos").alias("pos"),
-                )
-            )
-            if not dv_adds or not dv_adds[0]["rows"]:
-                return head  # no match: the staged empties are garbage
-            cdc_adds = self._cdc_of([
-                (matched.drop("__file", "__pos"), "update_preimage"),
-                (post, "update_postimage"),
-            ])
-            basis = self._dv_state(live)
-
-            def removes_mor(now: dict[str, dict]) -> list[str]:
-                now_dv = self._dv_state(now)
-                changed = {
-                    n for n, v in basis.items() if now_dv.get(n) != v
-                }
-                if changed & {
-                    t for d in dv_adds for t in d["targets"]
-                }:
-                    raise SnapshotConflict(
-                        "files masked by this update changed under a "
-                        "concurrent commit; re-run"
-                    )
-                return []
-
-            return self._commit_loop("update", adds, removes_mor,
-                                     schema=schema, dv_adds=dv_adds,
-                                     cdc_adds=cdc_adds,
-                                     colmap_basis=cm_basis)
+        # one select: every SET expression evaluates against the
+        # PRE-update row (SQL UPDATE), never a half-assigned one
+        post = matched.select(
+            *[
+                F.expr(assignments[c]).alias(c)
+                if c in assignments else F.col(c)
+                for c in matched.columns
+            ]
+        ).drop("__file", "__pos")
+        changes = [
+            (matched.drop("__file", "__pos"), "update_preimage"),
+            (post, "update_postimage"),
+        ]
+        if mode == "mor":
+            return self._commit_dml("update", head, live, schema,
+                                    rows=post.coalesce(1), gate=post,
+                                    masks=matched, changes=changes)
 
         touched = {
             r["__file"]
@@ -2379,11 +2236,10 @@ class SnapshotTable:
             return head
         cond = F.expr(f"coalesce(({condition}), false)")
         df = self._read_files({n: live[n] for n in touched}, schema)
-        # SQL UPDATE semantics: the condition AND every SET expression
-        # evaluate against the PRE-update row. One select (not
-        # sequential withColumn) — otherwise an assignment to a column
-        # the condition or a later expression reads would feed them
-        # the new value (SET val = val + 1, tag = val-dependent...)
+        # the condition AND every SET expression read the PRE-update
+        # row here too: one select (not sequential withColumn) —
+        # otherwise an assignment to a column the condition or a later
+        # expression reads would feed them the new value
         df = df.withColumn("__hit", cond)
         base_cols = [c for c in df.columns if c != "__hit"]
         df = df.select(
@@ -2399,36 +2255,12 @@ class SnapshotTable:
         )
         # gate only the SET results — the untouched rows of the
         # rewritten files pre-date the constraint's validated add
-        self._constraint_gate(df.filter(F.col("__hit")).drop("__hit"))
-        df = df.drop("__hit").coalesce(
-            output_files or max(1, len(touched))
+        return self._commit_dml(
+            "update", head, live, schema,
+            rows=df.drop("__hit").coalesce(len(touched)),
+            gate=df.filter(F.col("__hit")).drop("__hit"),
+            changes=changes, rewrites=touched,
         )
-        adds = self._stage(df)
-        cdc_post = matched.select(
-            *[
-                F.expr(assignments[c]).alias(c)
-                if c in assignments else F.col(c)
-                for c in matched.columns
-            ]
-        ).drop("__file", "__pos")
-        cdc_adds = self._cdc_of([
-            (matched.drop("__file", "__pos"), "update_preimage"),
-            (cdc_post, "update_postimage"),
-        ])
-        basis = self._dv_state({n: live[n] for n in touched})
-
-        def removes(now: dict[str, dict]) -> list[str]:
-            now_dv = self._dv_state(now)
-            if any(now_dv.get(n) != v for n, v in basis.items()):
-                raise SnapshotConflict(
-                    "files read by this update were removed (or gained "
-                    "deletion vectors) under a concurrent commit; re-run"
-                )
-            return sorted(basis)
-
-        return self._commit_loop("update", adds, removes,
-                                 schema=schema, cdc_adds=cdc_adds,
-                                 colmap_basis=cm_basis)
 
     def changes_between_timestamps(
         self, ts_from: float, ts_to: float, keys: list[str]
@@ -2442,23 +2274,6 @@ class SnapshotTable:
             self.version_at_timestamp(ts_to),
             keys,
         )
-
-    def _cdc_of(self, parts: list) -> list[dict] | None:
-        """Stage this DML commit's change rows as a cdc parquet, if
-        change-data capture is on. `parts` = [(DataFrame, label)]."""
-        if not self._effective_cdf():
-            return None
-        from pyspark.sql import functions as F
-
-        rows = None
-        for df, label in parts:
-            lab = df.withColumn("_change_type", F.lit(label))
-            rows = lab if rows is None else rows.unionByName(
-                lab, allowMissingColumns=True
-            )
-        if rows is None:
-            return None
-        return self._stage_cdc(rows)
 
     def change_feed(
         self, v_from: int, v_to: int, keys: list[str]
@@ -2485,8 +2300,6 @@ class SnapshotTable:
         - anything else (overwrite, restore, publish, pre-CDF DML)
           falls back to that commit's pairwise diff, which reads only
           the commit's churned files."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
         if v_from >= v_to:

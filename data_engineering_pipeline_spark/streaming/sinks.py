@@ -55,22 +55,25 @@ def _append_parquet(df: DataFrame, dest: str, batch_id: int = 0) -> None:
     still-missing rows on replay). File names carry the batch id AND a
     full-width uuid: a short token's birthday collision across a
     long stream's many batches would silently os.rename OVER an
-    earlier batch's file (row loss)."""
+    earlier batch's file (row loss). A write that raises removes its
+    staging dir before the error propagates."""
     import os
     import shutil
     import uuid
 
     tmp = f"{dest}.__app__{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    os.makedirs(dest, exist_ok=True)
-    tok = f"{batch_id}-{uuid.uuid4().hex}"
-    for i, f in enumerate(sorted(os.listdir(tmp))):
-        if f.endswith(".parquet"):
-            os.rename(
-                os.path.join(tmp, f),
-                os.path.join(dest, f"app-{tok}-{i:05d}.parquet"),
-            )
-    shutil.rmtree(tmp)
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+        os.makedirs(dest, exist_ok=True)
+        tok = f"{batch_id}-{uuid.uuid4().hex}"
+        for i, f in enumerate(sorted(os.listdir(tmp))):
+            if f.endswith(".parquet"):
+                os.rename(
+                    os.path.join(tmp, f),
+                    os.path.join(dest, f"app-{tok}-{i:05d}.parquet"),
+                )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _sweep_stale_appends(path: str) -> None:

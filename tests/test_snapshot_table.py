@@ -687,6 +687,41 @@ def test_update_where_file_confined(spark, tmp_path):
     assert t.update_where("k > 9999", {"val": "'x'"}) == v
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_set_result_keeps_column_type(spark, tmp_path, mode):
+    """A SET expression of a wider type (int * 1.5 is a double) is
+    stored in the column's own type in both modes: the rewritten file
+    must not fork the column's physical type, or every later read of
+    the table fails on the type mismatch. The change feed of the
+    update reads back in the same type."""
+    t = SnapshotTable(spark, str(tmp_path / "ut"), cdf=True)
+    t.append(spark.createDataFrame([(1, 2), (2, 4)], "k long, val int"))
+    t.append(spark.createDataFrame([(3, 6)], "k long, val int"))
+    v = t.update_where("k = 1", {"val": "val * 1.5"}, mode=mode)
+    df = t.read()
+    assert dict(df.dtypes)["val"] == "int"
+    assert {r.k: r.val for r in df.collect()} == {1: 3, 2: 4, 3: 6}
+    feed = t.change_feed(v - 1, v, ["k"])
+    assert dict(feed.dtypes)["val"] == "int"
+    assert {(r._change_type, r.val) for r in feed.collect()} == {
+        ("update_preimage", 2), ("update_postimage", 3),
+    }
+
+
+def test_failed_append_cleans_up_stage(spark, tmp_path):
+    """An append whose staged write raises leaves no `.stage-*` dir in
+    the table and commits nothing."""
+    path = str(tmp_path / "fa")
+    t = SnapshotTable(spark, path)
+    t.append(_kv(spark, [(1, "a")]))
+    boom = F.udf(lambda x: 1 // 0, "string")
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        t.append(_kv(spark, [(2, "b")]).select("k", boom("val").alias("val")))
+    assert [d for d in os.listdir(path) if d.startswith(".stage-")] == []
+    assert t.latest_version() == 0
+    assert {r.k: r.val for r in t.read().collect()} == {1: "a"}
+
+
 def test_vacuum_grace_window_spares_inflight_staging(spark, tmp_path):
     """An unreferenced data file YOUNGER than the grace window may be
     an in-flight writer mid-stage (files land in data/ before the

@@ -4,9 +4,10 @@ within the horizon."""
 
 from __future__ import annotations
 
-import pytest
-
+import os
 import shutil
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -972,3 +973,25 @@ def test_dedup_stream_drops_same_key_different_ts(spark, tmp_path, sf_smoke):
         "SELECT count(*) c, count(DISTINCT event_id) d FROM dedup_out2"
     ).collect()[0]
     assert got.c == got.d == ev.count()
+
+
+def test_append_parquet_failed_write_cleans_up(spark, tmp_path):
+    """A staged write that raises leaves the destination as it was and
+    no `<dest>.__app__*` staging dir behind."""
+    import glob
+
+    from data_engineering_pipeline_spark.streaming.sinks import (
+        _append_parquet,
+    )
+
+    dest = str(tmp_path / "store")
+    _append_parquet(spark.range(3), dest)
+    before = sorted(os.listdir(dest))
+    boom = F.udf(lambda x: 1 // 0, "long")
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        _append_parquet(spark.range(3).select(boom("id").alias("id")),
+                        dest, batch_id=1)
+    assert glob.glob(f"{dest}.__app__*") == []
+    assert sorted(os.listdir(dest)) == before
+    assert sorted(r.id for r in spark.read.parquet(dest).collect()) == [
+        0, 1, 2]

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_engineering_pipeline_spark.operators.zorder import (
+from data_engineering_pipeline_spark.sources.zorder import (
     grid_coord,
     write_zordered,
     zorder_key,
