@@ -51,9 +51,15 @@ discipline as refresh_shards' hash stamp: state built under different
 signing must not be probed incrementally. The prefix MODULI are pure
 layout, not structure (r12): handles adopt them from the store (root
 meta, overridden by each layout dir's own `_layout.json`), and only
-compact() may change them — it rewrites every file anyway, and the
-commit-time auto-compaction passes auto_grow=True so the partitioning
-doubles as the store outgrows its per-dir byte budget.
+compact() may change them — it rewrites every file anyway.
+
+A new store starts at modulus 1 in both layouts: one row dir plus one
+bucket dir per group, so a small store is a handful of files and the
+probe takes its modulus-1 fast paths (no pruning collects). The store
+grows at commit: as soon as a layout's partition dirs pass
+AUTO_GROW_DIR_BYTES, the commit runs compact(auto_grow=True), which
+doubles that layout's modulus until its dirs fit the budget again. A
+large bootstrap commit therefore re-partitions in the same commit.
 
 BandedSignatureStore semantics are IDENTICAL to operators/dedup.py
 incremental_minhash_dedup (same shingles, signatures, banding structs,
@@ -304,20 +310,27 @@ class BucketedAppendStore:
             # no broadcast hint: the seen side is pruned-store-sized
             # (batch-sized only when prefixes are selective) — AQE
             # picks the strategy from the pruned size at runtime
+            # eager: fresh feeds the pairs plan and commit's two
+            # concurrent writes, and concurrent jobs that first-
+            # materialize one lazy checkpoint race — one job's
+            # checkpoint drops the lineage while the other's tasks
+            # still report its SQL metric accumulators, which the
+            # driver then logs as ERRORs for non-existent accumulators
             fresh = signed.join(
                 self.seen_ids(signed.select(key)), key, "left_anti"
-            ).localCheckpoint(eager=False)
+            ).localCheckpoint(eager=True)
 
         # the batch's buckets name the ONLY store partitions a
         # candidate can live in: the bucket prefix is a pure function
         # of the bucket and the join requires bucket equality. The
         # touched-dirs collect is skipped when it cannot prune
         # anything: on an EMPTY store there are no dirs, and at bucket
-        # modulus 1 every id emits every group (one prefix each), so
-        # any non-empty batch touches every dir and the collect is a
-        # constant (an empty batch then reads dirs the bucket-equality
-        # join immediately drops — harmless, and only reachable in the
-        # modulus-1 graded mini-config). Skipping it also lets
+        # modulus 1 — the default until the store outgrows
+        # AUTO_GROW_DIR_BYTES — every id emits every group (one prefix
+        # each), so any non-empty batch touches every dir and the
+        # collect is a constant (an empty batch then reads dirs the
+        # bucket-equality join immediately drops — harmless, and the
+        # dirs are small at this modulus). Skipping it also lets
         # probe_rows stay lazy: its only other consumer is the
         # candidate join, and under AQE a localCheckpoint materializes
         # the plan at call time (one serial driver job saved per
@@ -472,10 +485,11 @@ class BucketedAppendStore:
         bucket rows FIRST, then payload rows (see module docstring for
         the crash order). Each partition dir only ever GAINS files —
         O(batch) writes — and when the FULLEST row-layout dir crosses
-        COMPACT_THRESHOLD files the whole store folds to one file per
-        dir (stage + swap, crash leaves old or new set, both
-        complete). A failed stage write removes the staging dir and
-        raises every write's error."""
+        COMPACT_THRESHOLD files, or a layout's dirs pass
+        AUTO_GROW_DIR_BYTES, the whole store folds to one file per
+        dir, growing the moduli to fit (stage + swap, crash leaves old
+        or new set, both complete). A failed stage write removes the
+        staging dir and raises every write's error."""
         self._write_meta()
         grp, bpfx = self._GROUP, self._BUCKET_PFX
         buckets = self._bucket_rows(fresh).withColumn(
@@ -493,9 +507,9 @@ class BucketedAppendStore:
             # the partition columns so a batch adds one file per
             # touched dir, not tasks x dirs. The two layouts stage
             # CONCURRENTLY (guide §2.6 — overlap independent jobs):
-            # the writes share only the checkpointed fresh frame
-            # (concurrent first-materialization of one local
-            # checkpoint is a synchronized RDDCheckpointData path),
+            # the writes share only the fresh frame, which probe()
+            # materialized eagerly (two jobs first-materializing one
+            # lazy checkpoint race on its SQL metric accumulators),
             # and the crash-order contract lives in the MOVES below,
             # which stay strictly buckets-then-rows. For a micro-batch
             # each write is mostly fixed job cost, so overlapping them
@@ -521,16 +535,21 @@ class BucketedAppendStore:
                           (self._rdir, self._ROW_MOD)):
             if _read_layout(base) is None:
                 _write_layout(base, {mod: getattr(self, mod)})
-        # trigger on the FULLEST dir, not the lexicographically first:
-        # skewed/tiny batches don't touch dirs symmetrically, so a
-        # single sampled dir can lag the real maximum by a multiple
-        # (the walk is bounded — post-compaction every dir holds one
-        # file, so this counts at most dirs x threshold files).
-        # auto_grow: the fold is also the point where the store checks
-        # whether its partition dirs have outgrown the probe-read
-        # budget and doubles the prefix moduli if so.
-        dirs = self._row_dirs(None)
-        if dirs and max(_n_parquet(d) for d in dirs) > self.COMPACT_THRESHOLD:
+        # one walk per layout feeds both triggers. Fold on the FULLEST
+        # row dir, not the lexicographically first: skewed/tiny batches
+        # don't touch dirs symmetrically, so a single sampled dir can
+        # lag the real maximum by a multiple (the walk is bounded —
+        # post-compaction every dir holds one file, so this counts at
+        # most dirs x threshold files). Grow as soon as the bytes call
+        # for a larger modulus, so a large bootstrap commit does not
+        # sit unpartitioned until COMPACT_THRESHOLD more commits; the
+        # trigger is the very test compact's auto_grow sizes by, so a
+        # triggered fold always grows (never a no-op fold per commit).
+        _, b_bytes = _layout_usage(self._bdir)
+        r_files, r_bytes = _layout_usage(self._rdir)
+        mods = (getattr(self, self._BUCKET_MOD), getattr(self, self._ROW_MOD))
+        if (r_files > self.COMPACT_THRESHOLD
+                or self._grown_moduli(b_bytes, r_bytes) != mods):
             self.compact(auto_grow=True)
 
     # --------------------------------------------------- maintenance
@@ -544,22 +563,22 @@ class BucketedAppendStore:
     AUTO_GROW_DIR_BYTES = 8 * 1024 * 1024
     MAX_PFX = 4096
 
-    def _grown_pfx(self, base: str, n_dirs_per_pfx: int, cur: int) -> int:
-        total = 0
-        for r, _dirs, files in os.walk(base):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(r, f))
-                    except OSError:
-                        pass
-        new = cur
-        while (
-            new < self.MAX_PFX
-            and total / (n_dirs_per_pfx * new) > self.AUTO_GROW_DIR_BYTES
-        ):
-            new *= 2
-        return new
+    def _grown_moduli(self, b_bytes: int, r_bytes: int) -> tuple[int, int]:
+        """(bucket, row) moduli, each doubled from the current one
+        until its layout's partition dirs average at most
+        AUTO_GROW_DIR_BYTES (prefixes are hashes, so the dirs of a
+        layout fill evenly)."""
+        def grow(total: int, n_dirs_per_pfx: int, cur: int) -> int:
+            while (cur < self.MAX_PFX
+                   and total / (n_dirs_per_pfx * cur)
+                   > self.AUTO_GROW_DIR_BYTES):
+                cur *= 2
+            return cur
+
+        return (
+            grow(b_bytes, self._n_groups(), getattr(self, self._BUCKET_MOD)),
+            grow(r_bytes, 1, getattr(self, self._ROW_MOD)),
+        )
 
     def _compact(self, to_bucket: int | None, to_row: int | None,
                  auto_grow: bool) -> None:
@@ -587,12 +606,10 @@ class BucketedAppendStore:
         new_b = to_bucket or old_b
         new_r = to_row or old_r
         if auto_grow:
-            if _dir_has_parquet(self._bdir):
-                new_b = max(
-                    new_b, self._grown_pfx(self._bdir, self._n_groups(), new_b)
-                )
-            if _dir_has_parquet(self._rdir):
-                new_r = max(new_r, self._grown_pfx(self._rdir, 1, new_r))
+            grown_b, grown_r = self._grown_moduli(
+                _layout_usage(self._bdir)[1], _layout_usage(self._rdir)[1]
+            )
+            new_b, new_r = max(new_b, grown_b), max(new_r, grown_r)
         layouts = (
             (self._bdir, [self._GROUP, self._BUCKET_PFX], self._BUCKET_MOD,
              old_b, new_b, F.pmod(F.col(self._BUCKET), F.lit(new_b))),
@@ -644,8 +661,8 @@ class BandedSignatureStore(BucketedAppendStore):
         n: int = 3,
         num_hashes: int = 32,
         bands: int = 8,
-        sig_pfx: int = 32,
-        bucket_pfx: int = 32,
+        sig_pfx: int = 1,
+        bucket_pfx: int = 1,
     ):
         self.id_col = id_col
         self.text_col = text_col
@@ -736,19 +753,22 @@ class BandedSignatureStore(BucketedAppendStore):
         # re-runs the tokenize+shingle+minhash chain (and the caller's
         # whole new_docs lineage above it); the r11 500k probe
         # measured that recomputation as the dominant wall. The
-        # exploded+aggregate form ON PURPOSE (r14 A/B, negative): a
-        # map-only array-expression form would keep this checkpoint
-        # lazy under AQE — no serial job here — but higher-order
-        # array functions are CodegenFallback (interpreted per
-        # element), and the interleaved probe-form A/B read the array
-        # variant 1.30x SLOWER on the corpus-sized graded batches
-        # (5.74/6.41 vs 4.67/4.66 s): the codegen'd aggregate beats
-        # the saved driver job.
+        # exploded+aggregate form ON PURPOSE (r14 A/B, negative):
+        # higher-order array functions are CodegenFallback
+        # (interpreted per element), and the interleaved probe-form
+        # A/B read a map-only array variant 1.30x SLOWER on the
+        # corpus-sized graded batches (5.74/6.41 vs 4.67/4.66 s).
         ex = shingles.select(
             F.col(id_col), F.explode("shingles").alias("shingle")
         )
+        # eager (one serial job): the probe's pairs plan and the
+        # caller's commit run concurrent jobs over sig, and concurrent
+        # first-materialization of one lazy checkpoint lets one job
+        # drop the lineage while the other's tasks still report its
+        # SQL metric accumulators — the driver logs each as an ERROR
+        # for a non-existent accumulator
         sig = minhash_signature(ex, id_col, self.num_hashes).localCheckpoint(
-            eager=False
+            eager=True
         )
 
         def est_jaccard(a, b) -> Column:
@@ -810,6 +830,21 @@ def _n_parquet(path: str) -> int:
     for _root, _dirs, files in os.walk(path):
         n += sum(1 for f in files if f.endswith(".parquet"))
     return n
+
+
+def _layout_usage(base: str) -> tuple[int, int]:
+    """(most parquet files in one dir, total parquet bytes) under a
+    layout dir — one walk; (0, 0) when it does not exist."""
+    most = total = 0
+    for r, _dirs, files in os.walk(base):
+        parts = [f for f in files if f.endswith(".parquet")]
+        most = max(most, len(parts))
+        for f in parts:
+            try:
+                total += os.path.getsize(os.path.join(r, f))
+            except OSError:
+                pass
+    return most, total
 
 
 def _partition_dirs(base: str, wanted: dict) -> list[str]:

@@ -68,8 +68,8 @@ class VecIndexStore(BucketedAppendStore):
         dim: int = 64,
         bits: int = 12,
         n_tables: int = 6,
-        spfx: int = 32,
-        vpfx: int = 32,
+        spfx: int = 1,
+        vpfx: int = 1,
     ):
         self.id_col = id_col
         self.vec_col = vec_col
@@ -126,11 +126,16 @@ class VecIndexStore(BucketedAppendStore):
         # checkpointed: the signer compiles tables x bits x dim
         # literals into the plan, and the index feeds the fresh
         # anti-join, the probe rows, the verify lookup AND the
-        # caller's commit
+        # caller's commit. Eager, because those consumers run as
+        # concurrent jobs (the pairs plan's stages, commit's two
+        # writes), and concurrent first-materialization of one lazy
+        # checkpoint lets one job drop the lineage while the other's
+        # tasks still report its SQL metric accumulators (logged by
+        # the driver as ERRORs for non-existent accumulators)
         new_idx = embedding_index(
             new_vecs, self.id_col, self.vec_col,
             self.dim, self.bits, self.n_tables,
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint(eager=True)
         masks = _probe_masks(self.bits, probe_radius)
         probed = new_idx.select(
             "__id", "tbl",

@@ -206,19 +206,9 @@ def dedup_embedding_incremental_store(
     b1 = emb.filter(F.pmod("vec_id", F.lit(3)) == 0)
     b2 = emb.filter(F.pmod("vec_id", F.lit(3)) != 0)
     root = fresh_tmpdir("vec_store_q_")
-    # minimal prefix moduli for the graded scale (the partition scheme
-    # is layout, and this store lives for ONE run): 1 table x 1 sig
-    # prefix + 1 vec prefix keeps the per-commit file count ~3 where
-    # the production default (32x32) would write hundreds of tiny
-    # files — the same fixed-cost trap dedup-incremental-store hit at
-    # sf0.1 — and at modulus 1 the probe skips its three pruning
-    # collects outright (they could only ever select the single dir),
-    # trimming serial driver jobs (OPTIMIZATION_r13.md). Pruning
-    # behavior is graded by test_vec_store.py.
     st = VecIndexStore(
         spark, os.path.join(root, "st"), id_col="vec_id",
         vec_col="embedding", dim=EMBED_DIM, bits=2, n_tables=1,
-        spfx=1, vpfx=1,
     )
     f1, p1 = st.probe(b1, threshold=NEARDUP_THRESHOLD, probe_radius=2)
     st.commit(f1, 1)

@@ -134,8 +134,11 @@ def test_crash_between_banded_and_sigs_converges(spark, tmp_path):
 def test_probe_prunes_partition_dirs(spark, tmp_path):
     """File-open witness (addendum-42 form): a 3-doc batch against a
     500-doc store lists only the (band, bpfx) dirs its own buckets
-    hash into — a strict subset of the store's dirs."""
-    st = BandedSignatureStore(spark, str(tmp_path / "st"))
+    hash into — a strict subset of the store's dirs. Pruning needs a
+    multi-prefix store, so the moduli are set explicitly (a store
+    this small stays at the modulus-1 default)."""
+    st = BandedSignatureStore(spark, str(tmp_path / "st"),
+                              sig_pfx=32, bucket_pfx=32)
     f, _ = st.probe(_docs(spark, range(0, 500)))
     st.commit(f, 1)
     stats: dict = {}
@@ -145,6 +148,72 @@ def test_probe_prunes_partition_dirs(spark, tmp_path):
     # 3 docs -> at most 24 band buckets -> at most 24 dirs listed
     assert stats["banded_dirs_opened"] <= 24
     assert stats["banded_files_opened"] < stats["banded_files_total"] / 4
+
+
+def _part_dirs(root, *levels):
+    return sorted(
+        os.path.relpath(d, root)
+        for d in glob.glob(os.path.join(root, *levels))
+    )
+
+
+def test_default_store_is_one_row_dir_plus_one_dir_per_band(
+    spark, tmp_path
+):
+    """A default store starts at modulus 1 in both layouts: one sigs
+    dir and one bucket dir per band — not bands x 32 + 32 dirs of
+    near-empty files."""
+    root = str(tmp_path / "st")
+    st = BandedSignatureStore(spark, root)
+    f, _ = st.probe(_docs(spark, range(0, 40)))
+    st.commit(f, 1)
+    assert (st.sig_pfx, st.bucket_pfx) == (1, 1)
+    assert _part_dirs(root, "sigs", "pfx=*") == ["sigs/pfx=0"]
+    assert _part_dirs(root, "banded", "band=*", "bpfx=*") == [
+        f"banded/band={b}/bpfx=0" for b in range(st.bands)
+    ]
+
+
+def test_bootstrap_commit_past_byte_budget_grows_moduli(spark, tmp_path):
+    """The commit that takes a layout past AUTO_GROW_DIR_BYTES raises
+    its modulus in that same commit (no COMPACT_THRESHOLD-commit
+    wait), and the grown store's pairs equal a fixed-moduli store's."""
+    b1 = _docs(spark, range(0, 60))
+    fixed = BandedSignatureStore(spark, str(tmp_path / "fixed"))
+    f1, _ = fixed.probe(b1)
+    fixed.commit(f1, 1)
+    assert (fixed.sig_pfx, fixed.bucket_pfx) == (1, 1)
+    # a budget a third of the smallest dir: both layouts must grow
+    smallest = min(
+        sum(os.path.getsize(f) for f in glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(str(tmp_path / "fixed" / "*" / "**" / "*pfx=0"),
+                           recursive=True)
+    )
+
+    root = str(tmp_path / "grown")
+    grown = BandedSignatureStore(spark, root)
+    grown.AUTO_GROW_DIR_BYTES = smallest // 3
+    g1, _ = grown.probe(b1)
+    grown.commit(g1, 1)
+    assert grown.sig_pfx > 1 and grown.bucket_pfx > 1
+    assert len(_part_dirs(root, "sigs", "pfx=*")) > 1
+    assert len(_part_dirs(root, "banded", "band=0", "bpfx=*")) > 1
+    # the new moduli are stamped: a default handle adopts them
+    reopened = BandedSignatureStore(spark, root)
+    assert (reopened.sig_pfx, reopened.bucket_pfx) == (
+        grown.sig_pfx, grown.bucket_pfx)
+
+    b2 = _docs(spark, list(range(60, 70)) + [5, 200, 201],
+               mutate=lambda i, w: [f"w4_{k}" for k in range(12)]
+               if i == 200 else w)
+    f2, p2 = fixed.probe(b2)
+    g2, q2 = grown.probe(b2)
+    assert _pairset(q2) == _pairset(p2)
+    assert any(a == 4 and b == 200 for a, b, _ in _pairset(p2))
+    fixed.commit(f2, 2)
+    grown.commit(g2, 2)
+    b3 = _docs(spark, [61, 300, 301])
+    assert _pairset(grown.probe(b3)[1]) == _pairset(fixed.probe(b3)[1])
 
 
 def test_meta_guard_rejects_structural_mismatch(spark, tmp_path):

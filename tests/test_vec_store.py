@@ -249,3 +249,67 @@ def test_modulus_one_store_matches_multi_prefix_store(spark, tmp_path):
     _, po2s = one.probe(b2, threshold=0.9, probe_radius=1, stats=st)
     assert _pairset(po2s) == _pairset(pm2)
     assert st["cand_pairs"] >= len(_pairset(pm2))
+
+
+def _part_dirs(root, *levels):
+    return sorted(
+        os.path.relpath(d, root)
+        for d in glob.glob(os.path.join(root, *levels))
+    )
+
+
+def test_default_store_is_one_row_dir_plus_one_dir_per_table(
+    spark, tmp_path
+):
+    """A default store starts at modulus 1 in both layouts: one vecs
+    dir and one signed dir per hash table."""
+    root = str(tmp_path / "st")
+    st = VecIndexStore(spark, root, **CFG)
+    f, _ = st.probe(_vecs(spark, range(0, 40)), threshold=0.9,
+                    probe_radius=1)
+    st.commit(f, 1)
+    assert (st.spfx, st.vpfx) == (1, 1)
+    assert _part_dirs(root, "vecs", "pfx=*") == ["vecs/pfx=0"]
+    assert _part_dirs(root, "signed", "tbl=*", "spfx=*") == [
+        f"signed/tbl={t}/spfx=0" for t in range(CFG["n_tables"])
+    ]
+
+
+def test_bootstrap_commit_past_byte_budget_grows_moduli(spark, tmp_path):
+    """The commit that takes a layout past AUTO_GROW_DIR_BYTES raises
+    its modulus in that same commit, and the grown store's pairs equal
+    a fixed-moduli store's."""
+    kw = dict(threshold=0.9, probe_radius=1)
+    b1 = _vecs(spark, range(0, 60))
+    fixed = VecIndexStore(spark, str(tmp_path / "fixed"), **CFG)
+    f1, _ = fixed.probe(b1, **kw)
+    fixed.commit(f1, 1)
+    assert (fixed.spfx, fixed.vpfx) == (1, 1)
+    # a budget a third of the smallest dir: both layouts must grow
+    smallest = min(
+        sum(os.path.getsize(f) for f in glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(str(tmp_path / "fixed" / "*" / "**" / "*pfx=0"),
+                           recursive=True)
+    )
+
+    root = str(tmp_path / "grown")
+    grown = VecIndexStore(spark, root, **CFG)
+    grown.AUTO_GROW_DIR_BYTES = smallest // 3
+    g1, _ = grown.probe(b1, **kw)
+    grown.commit(g1, 1)
+    assert grown.spfx > 1 and grown.vpfx > 1
+    assert len(_part_dirs(root, "vecs", "pfx=*")) > 1
+    assert len(_part_dirs(root, "signed", "tbl=0", "spfx=*")) > 1
+    reopened = VecIndexStore(spark, root, **CFG)
+    assert (reopened.spfx, reopened.vpfx) == (grown.spfx, grown.vpfx)
+
+    b2 = _vecs(spark, list(range(60, 70)) + [5, 101])
+    f2, p2 = fixed.probe(b2, **kw)
+    g2, q2 = grown.probe(b2, **kw)
+    assert _pairset(q2) == _pairset(p2)
+    assert any(a == 4 and b == 5 for a, b, _ in _pairset(p2))
+    fixed.commit(f2, 2)
+    grown.commit(g2, 2)
+    b3 = _vecs(spark, [61, 100])
+    assert _pairset(grown.probe(b3, **kw)[1]) == _pairset(
+        fixed.probe(b3, **kw)[1])
