@@ -22,7 +22,7 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_engineering_pipeline_spark.sources.dirswap import DirSwap
@@ -84,7 +84,13 @@ def upsert_parquet(
     The merged rows are fully staged before anything live is touched
     (so the lazy read of the live table completes first), then
     swapped in through sources/dirswap.py, which also heals a previous
-    run's interrupted swap before the table is read."""
+    run's interrupted swap before the table is read.
+
+    The returned count is an Observation on the rows the staging write
+    consumes, so counting adds no job. It sits above the merge's
+    window, in the write's result stage, so a retried map task cannot
+    count its rows twice; a merged frame that folds to an empty
+    relation still reports 0."""
     swap = DirSwap(path)
     old = None
     if os.path.exists(path):
@@ -101,17 +107,16 @@ def upsert_parquet(
                     clause = eq if clause is None else (clause & eq)
                 pred = clause if pred is None else (pred | clause)
             old = old.filter(pred)
-    merged = merge_last_write_wins(old, new, keys, order_col)
+    obs = Observation()
+    merged = merge_last_write_wins(old, new, keys, order_col).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    )
     writer = merged.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     with swap.writing():
         writer.parquet(swap.stage)
-        # explicit schema: an EMPTY merged frame under partitionBy
-        # writes no data files, and schema inference over that raises —
-        # the count must come back 0, not AnalysisException. Counting
-        # the stage costs no second pass over the live table.
-        n = spark.read.schema(merged.schema).parquet(swap.stage).count()
+    n = obs.get["n"]
     units = None  # the whole table
     if partition_cols and old is not None:
         # the staged hive leaves are exactly the touched partitions

@@ -1,3 +1,3 @@
-from data_engineering_pipeline_spark.plans.pipeline import Pipeline, stage
+from data_engineering_pipeline_spark.plans.pipeline import Pipeline
 
-__all__ = ["Pipeline", "stage"]
+__all__ = ["Pipeline"]

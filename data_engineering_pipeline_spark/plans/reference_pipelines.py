@@ -11,7 +11,9 @@ Transform: read raw x2 -> inner join on (iso3, year) -> drop-null ->
 Where the reference crossed process boundaries (Python -> Postgres ->
 Python) per stage, each pipeline here is ONE lazy plan ending in a
 write; the only materialization points are the upsert writes and the
-preview/count reporting stages."""
+preview/count reporting stages. The reported row counts of the raw and
+cleaned layers are the upserts' own counts (an Observation on the
+write), not a re-read of the layer."""
 
 from __future__ import annotations
 
@@ -59,12 +61,18 @@ def ingest_pipeline(
 
     def _write(ctx):
         n = upsert_parquet(spark, raw_path, ctx["validate"], RAW_KEYS, "fetched_at")
-        ctx["quarantine"].write.mode("append").parquet(quarantine_path)
+        # about 1% of a batch: one file per refresh, not one per slice
+        # of the driver-side records
+        ctx["quarantine"].coalesce(1).write.mode("append").parquet(
+            quarantine_path
+        )
         return n
 
     def _counts(ctx):
+        # the whole-table upsert's count is the raw layer's row count;
+        # the quarantine is a running total across refreshes
         return {
-            "raw": spark.read.parquet(raw_path).count(),
+            "raw": ctx["write"],
             "quarantined": spark.read.parquet(quarantine_path).count(),
         }
 
@@ -128,9 +136,10 @@ def transform_pipeline(spark: SparkSession, base_path: str) -> Pipeline:
         )
 
     def _preview(ctx):
-        df = spark.read.parquet(cleaned_path)
-        top = df.orderBy("country_iso3", "year").limit(10)
-        return {"total": df.count(), "first10": top.collect()}
+        top = spark.read.parquet(cleaned_path).orderBy(
+            "country_iso3", "year"
+        ).limit(10)
+        return {"total": ctx["write"], "first10": top.collect()}
 
     return (
         Pipeline("transform-cleaned")

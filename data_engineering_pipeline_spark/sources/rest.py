@@ -6,12 +6,12 @@ Mirrors the reference's World-Bank-style API surface: paginated
 exponential backoff, serial rate limiting. Fetching is inherently a
 driver/edge concern (the reference rate-limits serially,
 api_fetcher.py:106); the Spark boundary is `records_to_dataframe`, which
-turns fetched records into a DataFrame with the explicit nested schema
-for the flatten/validate stage (sources/json_ingest.py).
+turns fetched records into an Arrow-backed DataFrame with the explicit
+nested schema for the flatten/validate stage (sources/json_ingest.py).
 
 At real scale the fetch lands raw JSON files and Spark reads them with
 `spark.read.json(path, schema=WB_RECORD_SCHEMA)` — same downstream plan.
-Everything here is dependency-free stdlib so tests can inject a fake
+The fetch side is dependency-free stdlib so tests can inject a fake
 `opener` (no live API)."""
 
 from __future__ import annotations
@@ -23,7 +23,9 @@ import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_engineering_pipeline_spark.schemas import WB_RECORD_SCHEMA
 
@@ -129,7 +131,31 @@ def fetch_fanout(
     return out
 
 
+_WB_RECORD_ARROW = to_arrow_schema(WB_RECORD_SCHEMA)
+
+
+def _normalise(record: dict) -> dict:
+    """A non-string `date` (an integer year such as 2015) becomes its
+    string, which the year validation casts back like the reference's
+    `int(record["date"])`; Arrow would reject it in a string column.
+    An integral `value` needs nothing: Arrow widens it to double."""
+    date = record.get("date")
+    if date is None or isinstance(date, str):
+        return record
+    return {**record, "date": str(date)}
+
+
 def records_to_dataframe(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Driver-side records -> DataFrame with the explicit nested schema
-    (schemas.WB_RECORD_SCHEMA). Tolerates missing keys (None structs)."""
-    return spark.createDataFrame(records, WB_RECORD_SCHEMA)
+    (schemas.WB_RECORD_SCHEMA). Missing keys and `None` structs become
+    nulls, and keys outside the schema are ignored.
+
+    The records are converted once, on the driver, into an Arrow table
+    that Spark plans as a `LocalTableScan`: the jobs that scan the batch
+    (the raw upsert and the quarantine append) start no Python worker,
+    unlike `createDataFrame(list_of_dicts)`, whose rows come from a
+    Python RDD that every scanning job unpickles again."""
+    table = pa.Table.from_pylist(
+        [_normalise(r) for r in records], schema=_WB_RECORD_ARROW
+    )
+    return spark.createDataFrame(table)

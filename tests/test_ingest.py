@@ -100,3 +100,55 @@ def test_build_url_shape():
     url = build_url("ZAF", "NY.GDP.MKTP.KD.ZG", page=2)
     assert "country/ZAF/indicator/NY.GDP.MKTP.KD.ZG" in url
     assert "format=json" in url and "page=2" in url and "date=2000%3A2023" in url
+
+
+def test_integer_date_and_value_land_like_the_reference(spark):
+    """The reference casts `int(record["date"])` and keeps numeric
+    values as they come: an integer `date` lands as that year and an
+    integral `value` as its double, next to the string-dated form."""
+    recs = [
+        {**GOOD, "date": 2017, "value": 3},
+        {**GOOD, "date": "2018", "value": 4.5},
+    ]
+    valid, quarantine = split_valid(
+        flatten_wb_records(records_to_dataframe(spark, recs))
+    )
+    got = {(r.country_iso3, r.year): r.value for r in valid.collect()}
+    assert got == {("ZAF", 2017): 3.0, ("ZAF", 2018): 4.5}
+    assert isinstance(got[("ZAF", 2017)], float)
+    assert quarantine.count() == 0
+
+
+def test_empty_record_list(spark):
+    from data_engineering_pipeline_spark.schemas import WB_RECORD_SCHEMA
+
+    df = records_to_dataframe(spark, [])
+    assert df.schema == WB_RECORD_SCHEMA
+    valid, quarantine = split_valid(flatten_wb_records(df))
+    assert valid.count() == 0 and quarantine.count() == 0
+
+
+def test_missing_keys_and_none_structs(spark):
+    """Missing keys and `None` structs become nulls; keys outside the
+    schema are ignored. The iso3 fallback and the quarantine reasons
+    see those nulls as the reference sees absent fields."""
+    recs = [
+        {"countryiso3code": "ZAF", "date": "2015"},  # no value, no structs
+        {"country": {"id": "KEN"}, "date": "2015", "value": 1.0,
+         "unit": "", "obs_status": None},  # partial struct, extra keys
+        {"indicator": None, "country": None, "countryiso3code": None,
+         "date": "2015", "value": 2.0},  # nothing to take iso3 from
+        {"countryiso3code": "NGA", "value": 3.0},  # no date
+    ]
+    df = records_to_dataframe(spark, recs)
+    rows = df.collect()
+    assert rows[0].indicator is None and rows[0].value is None
+    assert rows[1].country.id == "KEN" and rows[1].country.value is None
+    valid, quarantine = split_valid(flatten_wb_records(df))
+    assert {(r.country_iso3, r.year, r.value) for r in valid.collect()} == {
+        ("ZAF", 2015, None),
+        ("KEN", 2015, 1.0),
+    }
+    assert sorted(r.reason for r in quarantine.collect()) == [
+        "bad_year", "missing_iso3",
+    ]

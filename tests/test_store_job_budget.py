@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 from data_engineering_pipeline_spark.operators.sig_store import (
     BandedSignatureStore,
 )
+from tests.job_budget import in_group, over_budget
 
-# call -> (jobs, tasks)
+# call (job group) -> (jobs, tasks)
 BUDGET = {
     "seen_ids": (1, 1),
     "probe": (4, 7),
@@ -42,27 +43,6 @@ def _docs(spark, ids):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _counts(spark, group):
-    tracker = spark.sparkContext.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    tasks = 0
-    for j in jobs:
-        info = tracker.getJobInfo(j)
-        for stage in info.stageIds if info else ():
-            si = tracker.getStageInfo(stage)
-            if si is not None:
-                tasks += si.numCompletedTasks
-    return len(jobs), tasks
-
-
-def _in_group(sc, name, call):
-    sc.setJobGroup(f"budget-{name}", name)
-    try:
-        return call()
-    finally:
-        sc._jsc.clearJobGroup()
-
-
 def test_store_calls_stay_within_job_budget(spark, tmp_path):
     sc = spark.sparkContext
     st = BandedSignatureStore(spark, str(tmp_path / "st"))
@@ -71,22 +51,16 @@ def test_store_calls_stay_within_job_budget(spark, tmp_path):
     batch = _docs(spark, list(range(300, 345)) + list(range(1000, 1005)))
 
     # the curation increment's calls, in its order
-    _in_group(sc, "seen_ids", lambda: st.seen_ids(batch.select("doc_id")))
-    fresh, pairs = _in_group(
+    in_group(sc, "seen_ids", lambda: st.seen_ids(batch.select("doc_id")))
+    fresh, pairs = in_group(
         sc, "probe",
         lambda: st.probe(batch, assume_fresh=True, max_bucket_size=32),
     )
     found = {(r.id_a, r.id_b) for r in pairs.collect()}
-    _in_group(sc, "commit", lambda: st.commit(fresh, 1))
+    in_group(sc, "commit", lambda: st.commit(fresh, 1))
 
     assert {(i, 1000 + i) for i in range(5)} <= found
     assert spark.read.parquet(str(tmp_path / "st" / "sigs")).filter(
         F.col("doc_id") >= 300).count() == 50
-    # the status tracker is fed by the listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    got = {name: _counts(spark, f"budget-{name}") for name in BUDGET}
-    over = {
-        name: (got[name], BUDGET[name]) for name in BUDGET
-        if got[name][0] > BUDGET[name][0] or got[name][1] > BUDGET[name][1]
-    }
+    over, got = over_budget(spark, BUDGET)
     assert not over, f"(jobs, tasks) over budget: {over}; all: {got}"

@@ -173,8 +173,8 @@ def test_scoped_bootstrap_stages_and_empty_batch(spark, tmp_path):
 
 def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
     """Empty new + no existing table: the partitioned empty write has
-    no data files; the count must come back 0 via the explicit-schema
-    read, not raise on schema inference."""
+    no data files; the count must come back 0, not raise on schema
+    inference."""
     from data_engineering_pipeline_spark.operators.upsert import (
         upsert_parquet,
     )
@@ -186,6 +186,67 @@ def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
     assert upsert_parquet(
         spark, path, empty, ["k"], "ver", ["lang"]
     ) == 0
+
+
+def test_returned_count_is_a_fresh_read_of_what_was_written(spark, tmp_path):
+    """The count comes from an Observation on the staged write, not a
+    re-read: it must equal a fresh read of the table (whole-table), of
+    the same table after a replay, and of the touched partitions
+    (partition-scoped)."""
+    keys = ["country_iso3", "year"]
+    path = str(tmp_path / "whole")
+    upsert_parquet(spark, path, _df(spark, [
+        ("ZAF", 2015, 1.2, 100), ("KEN", 2015, 3.4, 100),
+    ]), keys, "fetched_at")
+    batch = _df(spark, [("ZAF", 2015, 9.9, 200), ("NGA", 2016, 5.0, 200)])
+    n = upsert_parquet(spark, path, batch, keys, "fetched_at")
+    assert n == spark.read.parquet(path).count() == 3
+    n = upsert_parquet(spark, path, batch, keys, "fetched_at")
+    assert n == spark.read.parquet(path).count() == 3
+
+    scoped = str(tmp_path / "scoped")
+    upsert_parquet(spark, scoped, spark.createDataFrame(
+        [(1, "de", 1), (2, "de", 1), (3, "en", 1), (4, "fr", 1)],
+        "k long, lang string, ver long",
+    ), ["k"], "ver", ["lang"])
+    n = upsert_parquet(spark, scoped, spark.createDataFrame(
+        [(1, "de", 2), (5, "de", 1), (6, "en", 1)],
+        "k long, lang string, ver long",
+    ), ["k"], "ver", ["lang"])
+    touched = spark.read.parquet(scoped).filter(F.col("lang").isin("de", "en"))
+    assert n == touched.count() == 5
+    assert spark.read.parquet(scoped).count() == 6
+
+
+def test_empty_merge_counts_zero_without_blocking(spark, tmp_path):
+    """An empty `new` into a fresh table returns 0 and leaves a readable
+    empty table, both when the optimizer folds the merge to an empty
+    relation up front (a local empty frame) and when AQE folds it at
+    run time (a scan whose filter keeps nothing). The count must not
+    wait forever on an Observation the folded plan never fills."""
+    import threading
+
+    src = str(tmp_path / "src")
+    _df(spark, [("ZAF", 2015, 1.2, 100)]).write.parquet(src)
+    cases = {
+        "static": _df(spark, []),
+        "runtime": spark.read.parquet(src).filter(F.col("value") > 100),
+    }
+    for name, new in cases.items():
+        path = str(tmp_path / name)
+        out = {}
+
+        def run(path=path, new=new, out=out):
+            out["n"] = upsert_parquet(
+                spark, path, new, ["country_iso3", "year"], "fetched_at"
+            )
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), f"{name}: still waiting after 120 s"
+        assert out.get("n") == 0, f"{name}: {out}"
+        assert spark.read.parquet(path).count() == 0
 
 
 def test_failed_write_cleans_up(spark, tmp_path, monkeypatch):
