@@ -1,17 +1,16 @@
 """Persistent IVF vector index AS A SNAPSHOT TABLE — the managed-index
 architecture: cell assignments live in the transactional table format
 (sources/snapshot_table.py), cell-clustered so the manifest min/max on
-`cell` lets a probe SKIP every file holding no probed cell, and new
-vectors append incrementally under the same commit protocol as any
-other table write.
+`cell` lets a probe SKIP every file holding no probed cell, and a
+rebuild swaps the index under the same commit protocol as any other
+table write.
 
 Why this shape at 100 TB:
 - ann_topk_ivf (operators/similarity.py) re-assigns the corpus on
   every call; an index you BUILD ONCE and serve many queries from must
   persist the assignment. Storing it as a snapshot table buys, for
   free, everything the format already guarantees: atomic index swaps,
-  time travel to yesterday's index, crash-safe incremental adds,
-  compaction, retention.
+  time travel to yesterday's index, compaction, retention.
 - Cell-clustered files (repartition by cell before append, stat_cols
   = ["cell"]) turn the file-level stat pruning into the IVF probe: a
   search touching cells {3, 7} opens only the files whose [min, max]
@@ -27,14 +26,6 @@ Why this shape at 100 TB:
   a crash between sidecar write and commit leaves only an orphan
   sidecar; a concurrent reader keeps resolving the old commit and
   its old property.
-
-Incremental adds assign to the FROZEN centroids — standard IVF
-practice: cells drift as the distribution moves, recall decays
-gracefully, and a periodic rebuild() recenters; the imbalance metric
-(max cell share) tells the scheduler when. An add racing a REBUILD
-conflicts (SnapshotConflict) instead of committing rows assigned to
-superseded centroids: the commit loop re-checks the centroid
-property against the one the batch was assigned with.
 """
 
 from __future__ import annotations
@@ -53,7 +44,6 @@ from data_engineering_pipeline_spark.operators.similarity import (
     train_ivf_centroids,
 )
 from data_engineering_pipeline_spark.sources.snapshot_table import (
-    SnapshotConflict,
     SnapshotTable,
 )
 
@@ -161,63 +151,6 @@ def build_ann_index(
     return t
 
 
-def ann_index_add(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_of=None,
-    txn: tuple[str, int] | None = None,
-    code_of=None,
-) -> int:
-    """Incremental add: assign to the FROZEN centroids (or the same
-    deterministic quantizer) and append cell-clustered files. A
-    PQ-coded index (built with code_of) must be fed with the SAME
-    code_of so appended rows carry codes too. Rides
-    the table's txn protocol, so a streaming foreachBatch add is
-    exactly-once. A concurrent REBUILD that swaps the centroids makes
-    this add's assignments stale — the commit loop re-checks the
-    centroid property each retry and raises SnapshotConflict so the
-    caller re-assigns against the new centroids, instead of silently
-    committing rows the new probe would map to wrong cells."""
-    t = SnapshotTable(spark, path, stat_cols=["cell"])
-    if cell_of is not None:
-        cell = cell_of(F.col(vec_col))
-        n_cells = 32
-        assigned_with = None
-    else:
-        assigned_with = t.properties_at().get(CENTROIDS_PROP)
-        cents = load_centroids(path)
-        cell = _assign_cell(F.col(vec_col), cents)
-        n_cells = len(cents)
-    cols = [
-        F.col(id_col).alias("vec_id"),
-        _as_double(F.col(vec_col)).alias("embedding"),
-        cell.alias("cell"),
-    ]
-    if code_of is not None:
-        cols.append(code_of(F.col(vec_col)).alias("codes"))
-    rows = new_vecs.select(*cols)
-    clustered = _clustered(rows, n_cells)
-    if assigned_with is None:
-        return t.append(clustered, txn=txn)
-    if txn is not None and t.txn_version(txn[0]) >= txn[1]:
-        return t.latest_version()  # replayed add: no-op
-    adds = t._stage(clustered)
-
-    def removes(live: dict) -> list[str]:
-        if t.properties_at().get(CENTROIDS_PROP) != assigned_with:
-            raise SnapshotConflict(
-                "index rebuilt while this add was assigning; re-run "
-                "against the new centroids"
-            )
-        return []
-
-    return t._commit_loop("append", adds, removes,
-                          schema=clustered.schema, txn=txn)
-
-
 def ann_index_search(
     spark: SparkSession,
     queries: DataFrame,
@@ -314,24 +247,6 @@ def ann_index_search(
         .filter(F.col("rank") <= k)
         .orderBy(query_id, "rank")
     )
-
-
-def index_stats(spark: SparkSession, path: str) -> dict:
-    """Cell-balance health: total rows, live files, max cell share —
-    the rebuild trigger (a drifted distribution concentrates adds in
-    few cells, inflating probe cost)."""
-    t = SnapshotTable(spark, path, stat_cols=["cell"])
-    per_cell = (
-        t.read().groupBy("cell").count().collect()
-    )
-    total = sum(r["count"] for r in per_cell)
-    mx = max((r["count"] for r in per_cell), default=0)
-    return {
-        "rows": total,
-        "files": len(t._live_files()),
-        "cells": len(per_cell),
-        "max_cell_share": (mx / total) if total else 0.0,
-    }
 
 
 def ann_index_search_pq(

@@ -475,7 +475,6 @@ def incremental_minhash_dedup(
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    state_mode: str = "full",
 ) -> tuple[DataFrame, DataFrame]:
     """Continuous-ingestion dedup: test a NEW batch against the corpus
     without re-scanning it. `existing_signatures` is the persisted
@@ -486,23 +485,14 @@ def incremental_minhash_dedup(
     Returns (updated_signatures, dup_pairs):
     - updated_signatures: existing + this batch's signatures — persist
       this for the next batch. Ids already present in the store are
-      NOT re-appended (keys-only anti-join): a replayed micro-batch
-      (at-least-once restart after the state store committed) must
+      NOT re-appended (keys-only anti-join): a replayed batch must
       converge to the same state, not duplicate its signature rows and
-      fan out every future candidate join. state_mode="delta" returns
-      only this batch's fresh signature rows instead — for
-      append-organized state stores (streaming/sinks.py) where writing
-      the full union every batch is O(corpus), not O(batch).
+      fan out every future candidate join.
     - dup_pairs: (id_a, id_b, est_jaccard) where est_jaccard is the
       fraction of matching minhashes (the unbiased Jaccard estimator) —
       at threshold 0.7 with K=32 the estimator's std error is ~0.08, so
       exact-verify against stored text where precision matters.
     """
-    if state_mode not in ("full", "delta"):
-        # a typo'd mode silently meaning "full" would make an
-        # append-organized state store duplicate every prior row per
-        # batch — fail loudly instead (same guard as the embedding twin)
-        raise ValueError("state_mode must be 'full' or 'delta'")
     rows = _band_rows(num_hashes, bands)
     # exploded+aggregate signatures, like minhash_lsh_pairs (r14 A/B,
     # negative: the interpreted array form was 1.3-1.6x slower than
@@ -513,13 +503,11 @@ def incremental_minhash_dedup(
     sig = minhash_signature(ex, id_col, num_hashes)
 
     if existing_signatures is None:
-        fresh_sig = sig
         all_sigs = sig
     else:
-        fresh_sig = sig.join(
+        all_sigs = existing_signatures.unionByName(sig.join(
             existing_signatures.select(id_col), id_col, "left_anti"
-        )
-        all_sigs = existing_signatures.unionByName(fresh_sig)
+        ))
 
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
     band_cols = _band_structs(bands, rows)
@@ -582,8 +570,7 @@ def incremental_minhash_dedup(
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
-    state = fresh_sig if state_mode == "delta" else all_sigs
-    return state, pairs
+    return all_sigs, pairs
 
 
 def cross_corpus_contamination(

@@ -19,7 +19,7 @@ shuffle volume, not the O(corpus) read + re-band.
   time, never re-derived from the payload), hive-partitioned by group
   (band / hash table) and a bucket-value prefix: a batch's probe lists
   the (group, prefix) dirs its own buckets hash into and opens ONLY
-  those — for a small batch (the streaming steady state, and any batch
+  those — for a small batch (a steady-state increment, and any batch
   at the 100 TB corpus/batch ratio) most of the store is never listed,
   and even a bucket-saturating batch reads 3 slim columns instead of
   the payload. The probe side of the candidate join is the batch
@@ -36,8 +36,8 @@ and its verify score. Everything else — heal-on-open, the meta guard,
 pruned reads, the probe skeleton, the staged commit and compaction —
 is this one core.
 
-Append discipline is the sinks' move-files-in contract (O(batch),
-prior files never rewritten). Crash windows converge on replay: fresh
+Commits append by moving staged files in (O(batch), prior files
+never rewritten). Crash windows converge on replay: fresh
 rows are re-derived by the keys-only anti-join against the ROW layout,
 so a partial append is healed by re-committing the batch. commit()
 moves bucket files BEFORE row files — the one fatal order is a row
@@ -380,7 +380,7 @@ class BucketedAppendStore:
                 .filter(F.col("__rk") <= max_bucket_size)
                 .drop("__rk")
             )
-        # no broadcast hint on the batch side: for a micro-batch AQE
+        # no broadcast hint on the batch side: for a small batch AQE
         # broadcasts it anyway (probe_rows is checkpointed, so its
         # size is exact at runtime), while a bootstrap probe of a
         # whole corpus through an empty store would otherwise
@@ -474,8 +474,8 @@ class BucketedAppendStore:
     # -------------------------------------------------------- commit
     # per-partition-dir file count that triggers auto-compaction at
     # the end of a commit: every commit adds ~1 file per touched dir,
-    # so an unmaintained long stream accumulates one file per batch
-    # per dir and the probe's pruned reads degrade into a
+    # so a long unmaintained run of increments accumulates one file
+    # per batch per dir and the probe's pruned reads degrade into a
     # small-files listing problem. 64 bounds a dir's files while
     # keeping compaction amortized (one fold per 64 batches).
     COMPACT_THRESHOLD = 64
@@ -511,7 +511,7 @@ class BucketedAppendStore:
             # materialized eagerly (two jobs first-materializing one
             # lazy checkpoint race on its SQL metric accumulators),
             # and the crash-order contract lives in the MOVES below,
-            # which stay strictly buckets-then-rows. For a micro-batch
+            # which stay strictly buckets-then-rows. For a small batch
             # each write is mostly fixed job cost, so overlapping them
             # cuts the commit wall by close to the smaller write.
             _write_concurrently(self.spark, [
@@ -861,8 +861,8 @@ def _partition_dirs(base: str, wanted: dict) -> list[str]:
 
 def _move_partition_files(stage: str, dest: str, tok: str) -> int:
     """Move every staged part-file into the matching partition dir
-    under `dest` with unique names (the sinks' append discipline,
-    partition-aware). Returns the number of files moved."""
+    under `dest` with unique names, so prior files are never
+    rewritten. Returns the number of files moved."""
     moved = 0
     for root, _dirs, files in os.walk(stage):
         rel = os.path.relpath(root, stage)

@@ -505,8 +505,6 @@ def incremental_embedding_dedup(
     n_tables: int = 6,
     probe_radius: int = 0,
     scale: int = 4,
-    state_mode: str = "full",
-    pin_batch: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Continuous-ingestion embedding near-dup: test a NEW batch against
     everything already indexed without re-scoring the corpus — the
@@ -530,44 +528,16 @@ def incremental_embedding_dedup(
     batch's index rows (embedding_index schema); dup_pairs = (id_a,
     id_b, cos_sim) with id_a < id_b, cosine >= threshold, covering
     new-vs-old and new-vs-new. Ids already present in the existing
-    index are NOT re-appended (keys-only anti-join), so a replayed
-    micro-batch — an at-least-once restart that re-delivers rows after
-    the state store committed — converges to the same state instead of
-    duplicating index rows and fanning out every future candidate
-    join.
-
-    state_mode="delta" returns only this batch's FRESH index rows as
-    the first element instead of existing+fresh — for append-organized
-    state stores (streaming/sinks.py) where persisting the full union
-    every batch would make the state write O(corpus) instead of
-    O(batch). The pair computation is identical either way.
-
-    pin_batch=True localCheckpoints the batch's signed index rows
-    (batch-sized: rows x tables) before anything derives from them.
-    The hyperplane signature expression compiles n_tables x bits x dim
-    double literals into the plan, so EVERY action whose lineage
-    contains it pays seconds of re-analysis + codegen; a streaming
-    sink runs 3+ such actions per micro-batch (pairs, state append,
-    output append), which made the constant ~25 s/batch (BASELINE.md
-    addendum 4). Pinning evaluates the signatures exactly once per
-    batch and every downstream plan references the materialized rows
-    instead of the literal forest."""
-    if state_mode not in ("full", "delta"):
-        # a typo'd mode silently meaning "full" would make an
-        # append-organized state store duplicate every prior row per
-        # batch (O(corpus * batches) state) — fail loudly instead
-        raise ValueError("state_mode must be 'full' or 'delta'")
+    index are NOT re-appended (keys-only anti-join), so a replayed batch
+    converges to the same state instead of duplicating index rows and
+    fanning out every future candidate join."""
     new_idx = embedding_index(new_vecs, id_col, vec_col, dim, bits, n_tables)
-    if pin_batch:
-        new_idx = new_idx.localCheckpoint()
     if existing_index is None:
-        fresh_idx = new_idx
         all_idx = new_idx
     else:
-        fresh_idx = new_idx.join(
+        all_idx = existing_index.unionByName(new_idx.join(
             existing_index.select("__id"), "__id", "left_anti"
-        )
-        all_idx = existing_index.unionByName(fresh_idx)
+        ))
     masks = _probe_masks(bits, probe_radius)
     probed = new_idx.select(
         "__id", "tbl",
@@ -620,8 +590,7 @@ def incremental_embedding_dedup(
         .select("id_a", "id_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    state = fresh_idx if state_mode == "delta" else all_idx
-    return state, pairs
+    return all_idx, pairs
 
 
 def train_ivf_centroids(

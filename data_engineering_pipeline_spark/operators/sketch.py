@@ -222,26 +222,6 @@ def kmv_points(
     return df.select(F.col(group_col).alias("group"), u).distinct()
 
 
-def kmv_estimate_from_sketch(sketch: DataFrame, k: int) -> DataFrame:
-    """(group, n_seen, n_est) from a stored bottom-k sketch of
-    (group, u) rows — the read side of kmv_sketch_sink."""
-    w = Window.partitionBy("group").orderBy("u")
-    bottom = sketch.withColumn("__rk", F.row_number().over(w)).filter(
-        F.col("__rk") <= k
-    )
-    sk = bottom.groupBy("group").agg(
-        F.max("__rk").alias("n_seen"), F.max("u").alias("__uk")
-    )
-    est = F.when(
-        F.col("n_seen") < k, F.col("n_seen").cast("double")
-    ).otherwise(F.lit(kmv_numerator(k)) / F.col("__uk").cast("double"))
-    return sk.select(
-        "group",
-        F.col("n_seen").cast("long").alias("n_seen"),
-        est.alias("n_est"),
-    )
-
-
 def kmv_distinct(
     df: DataFrame,
     group_col: str,
@@ -354,7 +334,7 @@ def cms_build(
 # completely insensitive to duplicates, so no distinct pass is needed
 # anywhere. At 100 TB that means per-source vocabulary monitoring
 # costs one map-side-combined groupBy over (group, reg) — 64 rows of
-# state per group — maintained incrementally by hll_sketch_sink.
+# state per group, maintained incrementally by hll_merge.
 #
 # Cross-engine exactness: u splits as reg = u % m (low bits) and
 # v = u >> p (magnitude) — the classic index/rank split, so reg and
@@ -440,8 +420,8 @@ def hll_registers(
 
 def hll_merge(*register_tables: DataFrame) -> DataFrame:
     """Union register tables into one sketch: per-(group, reg) max.
-    Associative + idempotent, so incremental maintenance (streaming
-    batches, per-partition partials, cross-cluster union) always
+    Associative + idempotent, so incremental maintenance (batch
+    increments, per-partition partials, cross-cluster union) always
     converges to the sketch of the union of the inputs."""
     it = iter(register_tables)
     u = next(it)
@@ -451,10 +431,10 @@ def hll_merge(*register_tables: DataFrame) -> DataFrame:
 
 
 def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
-    """(group, n_regs, n_zero, n_est) from a register table — the read
-    side of hll_sketch_sink. The harmonic sum is integer-exact (max
-    2^46 < 2^53), empty registers contribute 2^RHO_CAP each, and the
-    estimate is one IEEE division."""
+    """(group, n_regs, n_zero, n_est) from a register table. The
+    harmonic sum is integer-exact (max 2^46 < 2^53), empty registers
+    contribute 2^RHO_CAP each, and the estimate is one IEEE
+    division."""
     s_present = F.sum(
         F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RHO_CAP} - rho)")
     )
@@ -519,7 +499,7 @@ def hll_distinct(
 # Why this instead of t-digest/KLL at 100 TB: those compress by
 # data-dependent compaction, so the sketch depends on partition
 # order; this one is a pure function of the multiset — deterministic
-# under repartition, additive map-side, streaming-mergeable — and
+# under repartition, additive map-side, mergeable by addition — and
 # every number in it is integer arithmetic (octave via a threshold
 # ladder, sub-bucket via a variable shift), so a SQL oracle
 # reproduces the sketch AND the quantile read-back bit for bit.
@@ -568,17 +548,6 @@ def qsketch_build(
         .groupBy("group", "bid")
         .agg(F.sum("__w").alias("cnt"))
     )
-
-
-def qsketch_merge(*sketches: DataFrame) -> DataFrame:
-    """Additive merge: the sketch of a union is the per-(group, bid)
-    sum of the parts — commutative/associative, so incremental and
-    streaming maintenance converge regardless of batching."""
-    it = iter(sketches)
-    u = next(it)
-    for t in it:
-        u = u.unionByName(t)
-    return u.groupBy("group", "bid").agg(F.sum("cnt").alias("cnt"))
 
 
 def qsketch_bounds(bid: Column) -> tuple[Column, Column]:
@@ -1052,7 +1021,7 @@ def refresh_cms_sketch(src, sketch, keys: list[str], value_col: str):
     maintained cell table equals cms_build(current snapshot)
     cell-for-cell after ANY DML history (the property HLL/KMV lack —
     max-based sketches cannot retract; their refreshers must fall
-    back to rebuild on deletes, documented in hll_sketch_sink).
+    back to rebuild on deletes, as refresh_hll_sketch does).
 
     Refresh cost tracks churn (changes() reads the netted diff, on
     CDF tables just the captured change rows), the rewrite is

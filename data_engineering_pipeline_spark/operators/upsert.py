@@ -11,15 +11,12 @@ idioms:
 - `upsert_parquet(...)`: read-merge-write for a Parquet path, the one
   upsert path for plain Parquet layers. It stages the merged rows and
   swaps them in through sources/dirswap.py, emulating the reference's
-  commit-on-success scope (database.py:60-71). With `partition_cols`
-  only the partitions the batch touches are read and swapped (dynamic
-  partition overwrite), the form that holds up at 100 TB.
-  Single-writer, like the reference.
+  commit-on-success scope (database.py:60-71). The whole table is one
+  swap unit. Single-writer, like the reference.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -61,30 +58,17 @@ def upsert_parquet(
     new: DataFrame,
     keys: list[str],
     order_col: str,
-    partition_cols: list[str] | None = None,
 ) -> int:
     """Merge `new` into the Parquet table at `path`. Re-running with the
     same input leaves the table unchanged (idempotency property,
-    README1.md:128-132). Returns the number of rows written: the whole
-    merged table, or with `partition_cols` the touched partitions.
+    README1.md:128-132). Returns the number of rows in the merged
+    table.
 
-    Without `partition_cols` the whole table is read, merged and
-    swapped in as one unit. With them the table is laid out
-    hive-partitioned, so downstream scans filtered on those columns
-    prune directories (the SURVEY §4.2 default for the cleaned layer),
-    and only the partitions the batch touches are read, rewritten and
-    swapped: the touched partition VALUES are collected (one row per
-    partition, not per record), the old side is read through a
-    partition-pruned filter, and untouched partitions are never read,
-    shuffled or rewritten. Keys must not move between partitions
-    (partition_cols ⊆ the key's functional dependencies), the standard
-    constraint for a partition-scoped MERGE. A table that does not
-    exist yet is written whole either way.
-
-    The merged rows are fully staged before anything live is touched
-    (so the lazy read of the live table completes first), then
-    swapped in through sources/dirswap.py, which also heals a previous
-    run's interrupted swap before the table is read.
+    The whole table is read, merged and swapped in as one unit. The
+    merged rows are fully staged before anything live is touched (so
+    the lazy read of the live table completes first), then swapped in
+    through sources/dirswap.py, which also heals a previous run's
+    interrupted swap before the table is read.
 
     The returned count is an Observation on the rows the staging write
     consumes, so counting adds no job. It sits above the merge's
@@ -92,37 +76,13 @@ def upsert_parquet(
     count its rows twice; a merged frame that folds to an empty
     relation still reports 0."""
     swap = DirSwap(path)
-    old = None
-    if os.path.exists(path):
-        old = spark.read.parquet(path)
-        if partition_cols:
-            touched = new.select(*partition_cols).distinct().collect()
-            if not touched:
-                return 0  # empty batch: nothing to merge, table untouched
-            pred = None
-            for r in touched:
-                clause = None
-                for c in partition_cols:
-                    eq = F.col(c).eqNullSafe(F.lit(r[c]))
-                    clause = eq if clause is None else (clause & eq)
-                pred = clause if pred is None else (pred | clause)
-            old = old.filter(pred)
+    old = spark.read.parquet(path) if os.path.exists(path) else None
     obs = Observation()
     merged = merge_last_write_wins(old, new, keys, order_col).observe(
         obs, F.count(F.lit(1)).alias("n")
     )
-    writer = merged.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
     with swap.writing():
-        writer.parquet(swap.stage)
+        merged.write.mode("overwrite").parquet(swap.stage)
     n = obs.get["n"]
-    units = None  # the whole table
-    if partition_cols and old is not None:
-        # the staged hive leaves are exactly the touched partitions
-        leaves = glob.glob(os.path.join(
-            glob.escape(swap.stage), *["*=*"] * len(partition_cols)
-        ))
-        units = sorted(os.path.relpath(d, swap.stage) for d in leaves)
-    swap.commit(units)
+    swap.commit()
     return n

@@ -3,7 +3,7 @@ embedding near-dup — the embedding subclass of
 operators/sig_store.BucketedAppendStore.
 
 A flat index (one parquet dir of embedding_index rows) re-reads EVERY
-index row per micro-batch — and each row carries the full vector,
+index row per batch — and each row carries the full vector,
 duplicated once per hash table — so both the probe read and the
 on-disk footprint grow with the corpus (the same addendum-56 read term
 the banded signature store removed for text). This store persists

@@ -554,16 +554,10 @@ def curate_increment(
     ppl_train_cap: int | None = 100_000,
     probe_max_bucket: int | None = 256,
     timings: dict | None = None,
-    txn_app: str = "curate",
 ) -> dict:
     """Continuation: the same stages, batch-incremental. The landing
-    append is (txn_app, batch_id)-idempotent; near-dedup probes only
-    the batch against the persisted signature store. DISTINCT WRITERS
-    MUST USE DISTINCT txn_app NAMES (r9 review): batch ids are only
-    unique within one writer's sequence — a streaming query's
-    micro-batch 0 against a work_dir bootstrapped by curate_batch
-    (which commits as ("curate", 0)) would otherwise be silently
-    swallowed as a replay of the bootstrap.
+    append is ("curate", batch_id)-idempotent; near-dedup probes only
+    the batch against the persisted signature store.
 
     mode="rebuild" (default): the curated table is deterministically
     rebuilt from the landing snapshot — increments converge BIT-EXACT
@@ -646,7 +640,7 @@ def curate_increment(
         t_mark = now
 
     landing = SnapshotTable(spark, p["landing"])
-    landing.append(batch, txn=(txn_app, batch_id), expect=GATES)
+    landing.append(batch, txn=("curate", batch_id), expect=GATES)
     landed = landing.read()
     stats["landed"] = landed.count()
     _mark("land")
@@ -881,7 +875,7 @@ def curate_increment(
             sampled.repartitionByRange(
                 F.col("doc_id").asc_nulls_last()
             ).sortWithinPartitions(F.col("doc_id").asc_nulls_last()),
-            txn=(txn_app, batch_id),
+            txn=("curate", batch_id),
         )
         stats["curated"] = curated.detail()["num_rows"]  # manifest
         _mark("curated_write")

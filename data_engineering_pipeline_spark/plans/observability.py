@@ -4,9 +4,7 @@ Production pipelines need row counts, null rates, and domain checks on
 every run — but a separate `df.count()`/agg per metric re-executes the
 plan. `df.observe()` piggybacks metric accumulators on the SAME action
 that materializes the data (zero extra passes, zero extra shuffles), so
-a 100 TB write reports its own audit numbers for free. The same
-metrics surface per-micro-batch in Structured Streaming progress
-events.
+a 100 TB write reports its own audit numbers for free.
 """
 
 from __future__ import annotations

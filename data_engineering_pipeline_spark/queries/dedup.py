@@ -601,7 +601,7 @@ def corpus_new_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifier column, and every output value is deterministic given
     the portable hash (two IEEE divisions and one multiply in the
     same tree on both engines). At 100 TB the sketches are k longs
-    per crawl, maintained incrementally (kmv_sketch_sink), and
+    per crawl, maintained incrementally, and
     'what did this crawl add' never re-reads either corpus."""
     from data_engineering_pipeline_spark.operators.sketch import (
         kmv_difference_pairs,

@@ -179,8 +179,7 @@ def dedup_embedding_incremental_store(
     """Two-batch incremental embedding near-dup through the bucketed
     vector index store (operators/vec_store.py, r12) — the embedding
     twin of dedup-incremental-store and the first ORACLE-graded path
-    through VecIndexStore (the r12 verdict's top gap: the streaming
-    embedding-dedup sink ran a store no oracle had ever hashed).
+    through VecIndexStore.
     vec_id % 3 == 0 lands as batch 1, everything else probes as batch
     2 against the PERSISTED store — the probe opens only the
     (tbl, sig-prefix) partitions its own mask-expanded signatures

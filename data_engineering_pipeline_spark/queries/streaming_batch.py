@@ -1,9 +1,7 @@
-"""Windowed event-analytics queries (batch form) over the events table.
-
-These are the batch twins of the Structured Streaming operators in
-data_engineering_pipeline_spark/streaming/ — same window semantics, so
-the oracle that checks the batch plan also pins down the streaming one
-(streaming tests assert stream output == batch output on the same data).
+"""Windowed event-analytics queries over the events table: tumbling and
+sliding windows, sessions, funnels, cohort retention, transitions,
+hourly anomalies and HyperLogLog distinct users, each checked against
+its SQL oracle.
 
 Timestamps are compared in epoch MICROSECONDS (bigint) throughout:
 events.parquet stores TIMESTAMP(NANOS); both engines truncate ns -> us
@@ -526,7 +524,7 @@ def events_distinct_users_hll(
     scramble/register path the text sketches use), with the exact
     distinct count as the verifier. This is the sketch tier on the
     events stream: per-type register tables are 64 small ints,
-    maintained incrementally by hll_sketch_sink with per-register max
+    maintained incrementally by hll_merge with per-register max
     — the shape of 'daily active users at 100 TB of events' — and
     every output value is bit-exact cross-engine."""
     from data_engineering_pipeline_spark.operators.sketch import (

@@ -156,8 +156,7 @@ def events_range_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-click attribution, batch form (the streaming twin is
-    streaming/events.py click_purchase_attribution): every purchase is
+    """Last-click attribution: every purchase is
     attributed to the same user's most recent click at or before it
     within a 30-minute horizon; purchases with no qualifying click keep
     null. Deterministic tie-break (click ts desc, click_id desc).

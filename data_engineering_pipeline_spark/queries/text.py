@@ -1191,11 +1191,11 @@ def text_vocab_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO distinct anywhere — registers are a duplicate-insensitive
     max-aggregate, map-side combined — which is the property that
     makes HLL the 100 TB vocabulary monitor: 64 small ints of state
-    per source, merged by per-register max (hll_merge /
-    hll_sketch_sink). The rho threshold ladder, integer harmonic sum,
-    and single-literal numerator make every output value bit-exact
-    cross-engine; n_zero is surfaced for driver-side linear-counting
-    correction (ln stays out of the graded path)."""
+    per source, merged by per-register max (hll_merge). The rho
+    threshold ladder, integer harmonic sum, and single-literal
+    numerator make every output value bit-exact cross-engine; n_zero
+    is surfaced for driver-side linear-counting correction (ln stays
+    out of the graded path)."""
     from data_engineering_pipeline_spark.operators.sketch import (
         hll_distinct,
     )

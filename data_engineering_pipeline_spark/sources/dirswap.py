@@ -4,9 +4,8 @@ The reference commits each refresh in one transaction scope, so a
 failed run never loses the table (database.py:60-71). A directory of
 Parquet files gets the same guarantee by swapping: stage the new copy
 beside the live one, then rename it in. Every writer that replaces a
-directory, or some subdirectories of one (hive partitions, shard
-dirs), does it through `DirSwap`; Spark reads and writes stay with the
-caller:
+directory, or some subdirectories of one (shard dirs), does it
+through `DirSwap`; Spark reads and writes stay with the caller:
 
     swap = DirSwap(target)     # heals an interrupted swap of target
     old = read(target)
@@ -139,7 +138,7 @@ class DirSwap:
 
     def commit(self, units: list[str] | None = None) -> None:
         """Swap the staged copy in. `units` are paths relative to the
-        target (hive leaves, shard dirs); None swaps the whole dir. A
+        target (shard dirs); None swaps the whole dir. A
         unit missing from the stage is removed from the target."""
         units = [""] if units is None else units
         staged = [u for u in units if os.path.exists(_at(self.stage, u))]

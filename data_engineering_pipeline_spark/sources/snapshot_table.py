@@ -1455,10 +1455,11 @@ class SnapshotTable:
 
         `txn=(app_id, txn_version)` makes the append IDEMPOTENT per
         (app, version) — the Delta txnAppId/txnVersion protocol that
-        gives streaming foreachBatch exactly-once semantics: a replayed
-        micro-batch (crash after commit, before the streaming
-        checkpoint advanced) finds its txn already in the log and
-        becomes a no-op. The check re-runs inside the commit retry
+        gives a replayed batch exactly-once semantics: a batch re-run
+        after its commit landed (a `curate_increment` retried with the
+        same batch id, or a stream epoch re-delivered through
+        sources/spark_datasource.py) finds its txn already in the log
+        and becomes a no-op. The check re-runs inside the commit retry
         loop, so two racing replayers cannot both commit: the loser's
         re-read sees the winner's txn and abandons (its staged files
         are unreferenced garbage for vacuum())."""
@@ -1769,8 +1770,8 @@ class SnapshotTable:
         uniqueness changes()/CDC and later merges rely on. Pass
         `dedupe_source=<order col>` to instead keep, per key, the row
         with the highest order value (ties broken deterministically by
-        the key columns' row) — the last-write-wins shape a streaming
-        micro-batch with in-batch updates needs."""
+        the key columns' row) — the last-write-wins shape a batch
+        with in-batch updates needs."""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 

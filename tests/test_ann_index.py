@@ -1,6 +1,6 @@
 """Persistent IVF index on the snapshot table: build/search recall,
-probe-time file skipping, exactly-once incremental adds, health
-stats."""
+probe-time file skipping, centroids versioned with the assignments,
+two-phase PQ search."""
 
 from __future__ import annotations
 
@@ -12,10 +12,8 @@ import random
 from pyspark.sql import functions as F
 
 from data_engineering_pipeline_spark.operators.ann_index import (
-    ann_index_add,
     ann_index_search,
     build_ann_index,
-    index_stats,
     load_centroids,
 )
 from data_engineering_pipeline_spark.operators.similarity import (
@@ -65,33 +63,6 @@ def test_build_search_recall_and_pruning(spark, tmp_path):
     assert recall >= 0.9, recall
 
 
-def test_incremental_add_exactly_once_and_served(spark, tmp_path):
-    rows = _clustered_vecs(600)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "idx2")
-    build_ann_index(spark, df, path, n_cells=4)
-
-    # add a batch of exact duplicates of vectors 0..9 under new ids
-    dup = df.filter(F.col("vec_id") < 10).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
-    )
-    v1 = ann_index_add(spark, dup, path, txn=("ingest", 0))
-    v_replay = ann_index_add(spark, dup, path, txn=("ingest", 0))
-    assert v_replay == v1  # replay is a no-op
-
-    st = index_stats(spark, path)
-    assert st["rows"] == 610 and st["cells"] <= 4
-
-    # the added duplicates are immediately served as top hits
-    queries = df.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = ann_index_search(spark, queries, path, k=1, n_probe=1)
-    top = {r.query_id: (r.corpus_id, r.cos_sim) for r in got.collect()}
-    for q, (cid, sim) in top.items():
-        assert cid == q + 10_000 and sim == 1.0
-
-
 def test_search_reads_fewer_files_than_table(spark, tmp_path):
     """The probe's pruned read must hand Spark strictly fewer files
     when queries concentrate in one cell range."""
@@ -114,48 +85,6 @@ def test_search_reads_fewer_files_than_table(spark, tmp_path):
     ).collect()[0]["c"]
     pruned = t.read(prune=[("cell", cell, cell)])
     assert len(pruned.inputFiles()) < n_all
-
-
-def test_ann_index_sink_streaming_exactly_once(spark, tmp_path):
-    """Streaming adds through the sink: replayed batches (same app,
-    fresh checkpoint) are no-ops; the streamed vectors are served."""
-    from data_engineering_pipeline_spark.streaming.sinks import (
-        ann_index_sink,
-    )
-
-    rows = _clustered_vecs(400)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "sidx")
-    build_ann_index(spark, df, path, n_cells=4)
-
-    land = tmp_path / "land"
-    land.mkdir()
-    dup = df.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 50_000).alias("vec_id"), "embedding"
-    )
-    dup.coalesce(1).write.parquet(str(land / "b0"))
-    stream = spark.readStream.schema(dup.schema).parquet(
-        str(land / "b0")
-    )
-    ann_index_sink(
-        stream, path, str(tmp_path / "ck1"), "vec-ingest"
-    ).awaitTermination()
-    assert index_stats(spark, path)["rows"] == 405
-
-    # full replay with a fresh checkpoint: nothing doubles
-    stream2 = spark.readStream.schema(dup.schema).parquet(
-        str(land / "b0")
-    )
-    ann_index_sink(
-        stream2, path, str(tmp_path / "ck2"), "vec-ingest"
-    ).awaitTermination()
-    assert index_stats(spark, path)["rows"] == 405
-
-    q = df.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = ann_index_search(spark, q, path, k=1, n_probe=1)
-    assert all(r.corpus_id == r.query_id + 50_000 for r in got.collect())
 
 
 def test_centroids_versioned_with_snapshot(spark, tmp_path):
@@ -197,51 +126,6 @@ def test_centroids_versioned_with_snapshot(spark, tmp_path):
     hits = ann_index_search(spark, q, path, k=1, n_probe=2).collect()
     assert len(hits) == 5
     assert all(r.cos_sim > 0.95 for r in hits)
-
-
-def test_add_conflicts_with_concurrent_rebuild(spark, tmp_path):
-    """An incremental add whose assignment centroids were superseded
-    by a rebuild mid-flight must raise SnapshotConflict, never commit
-    rows the new probe would map to wrong cells."""
-    import pytest
-
-    from data_engineering_pipeline_spark.sources.snapshot_table import (
-        SnapshotConflict,
-        SnapshotTable,
-    )
-
-    rows = _clustered_vecs(400)
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "cr")
-    build_ann_index(spark, df, path, n_cells=4, seed=7)
-
-    t = SnapshotTable(spark, path, stat_cols=["cell"])
-    orig_stage = SnapshotTable._stage
-    fired = {}
-
-    def hooked(self, frame):
-        staged = orig_stage(self, frame)
-        if not fired and os.path.abspath(self.path) == os.path.abspath(path):
-            fired["x"] = True
-            # a rebuild lands between the add's staging and its commit
-            build_ann_index(spark, df, path, n_cells=8, seed=11)
-        return staged
-
-    import os
-
-    SnapshotTable._stage = hooked
-    try:
-        new = df.filter(F.col("vec_id") < 3).select(
-            (F.col("vec_id") + 9000).alias("vec_id"), "embedding"
-        )
-        with pytest.raises(SnapshotConflict, match="rebuilt"):
-            ann_index_add(spark, new, path)
-    finally:
-        SnapshotTable._stage = orig_stage
-    # the conflicted add left nothing visible; the re-run succeeds
-    assert index_stats(spark, path)["rows"] == 400
-    ann_index_add(spark, new, path)
-    assert index_stats(spark, path)["rows"] == 403
 
 
 @pytest.mark.slow  # heavy e2e/property: close-out tier (pytest.ini)

@@ -1,9 +1,9 @@
 """The shared bucketed append store core (operators/sig_store.py
-BucketedAppendStore), driven through both of its stores: a failed
-stage write cleans up and reports every error, and a crash at EVERY
-filesystem step of a commit or a compaction leaves a store whose
-readers see complete state and whose replay converges to the
-uncrashed store's rows and pairs."""
+BucketedAppendStore), driven through both of its stores: a commit only
+adds part-files, a failed stage write cleans up and reports every
+error, and a crash at EVERY filesystem step of a commit or a
+compaction leaves a store whose readers see complete state and whose
+replay converges to the uncrashed store's rows and pairs."""
 
 from __future__ import annotations
 
@@ -209,6 +209,28 @@ def test_failed_stage_cleans_up_and_reports_every_error(
     monkeypatch.setattr(DataFrameWriter, "parquet", real)
     st.commit(fresh, 1)
     assert {row[0] for row in _content(st)[1]} == set(range(8))
+
+
+@pytest.mark.parametrize("kind", KINDS, ids=lambda k: k.name)
+def test_commit_appends_without_rewriting(spark, tmp_path, kind):
+    """Below COMPACT_THRESHOLD a commit only adds part-files: every
+    file of the first commit keeps its name and mtime through the
+    second, so a commit costs O(batch), not O(store)."""
+    root = str(tmp_path / "st")
+    st = kind.make(spark, root)
+
+    def part_files():
+        return {f: os.stat(f).st_mtime_ns for f in glob.glob(
+            os.path.join(root, "**", "*.parquet"), recursive=True)}
+
+    seen = []
+    for b, ids in enumerate((range(0, 10), range(10, 20))):
+        fresh, _ = st.probe(kind.batch(spark, ids), **kind.probe_kw)
+        st.commit(fresh, b)
+        seen.append(part_files())
+    first, second = seen
+    assert first and set(first) < set(second)
+    assert {f: second[f] for f in first} == first
 
 
 # the sig commit sweep is tier-1; the other sweeps are close-out tier

@@ -116,35 +116,6 @@ def test_pipeline_fail_gate_blocks_batch(spark, tmp_path):
     assert not os.path.isdir(str(tmp_path / "w" / "landing" / "_log"))
 
 
-@pytest.mark.slow  # heavy e2e/property: close-out tier (pytest.ini)
-def test_curation_sink_streaming(spark, tmp_path):
-    """The streaming front door: documents landed as files flow through
-    the full pipeline per micro-batch, and a replay with a fresh
-    checkpoint leaves the curated table's version untouched."""
-    from data_engineering_pipeline_spark.streaming.sinks import (
-        curation_sink,
-    )
-
-    land = tmp_path / "in"
-    land.mkdir()
-    _mk_docs(spark, _corpus(0, 30)).coalesce(1).write.parquet(
-        str(land / "b0")
-    )
-    work = str(tmp_path / "work")
-    schema = "doc_id long, lang string, text string"
-
-    stream = spark.readStream.schema(schema).parquet(str(land / "b0"))
-    curation_sink(stream, work, str(tmp_path / "ck1")).awaitTermination()
-    cur = SnapshotTable(spark, f"{work}/curated")
-    n1, v1 = cur.read().count(), cur.latest_version()
-    assert n1 > 0
-    assert os.path.isdir(f"{work}/shards/shard=0")
-
-    stream2 = spark.readStream.schema(schema).parquet(str(land / "b0"))
-    curation_sink(stream2, work, str(tmp_path / "ck2")).awaitTermination()
-    assert cur.latest_version() == v1 and cur.read().count() == n1
-
-
 @pytest.mark.slow  # multi-minute pipeline e2e: close-out tier (pytest.ini)
 def test_delta_mode_merges_and_retracts(spark, tmp_path):
     """O(batch) delta increments: batch survivors merge in under the
@@ -662,53 +633,6 @@ def test_null_lang_docs_converge_across_modes(spark, tmp_path):
             SnapshotTable(spark, os.path.join(one, "curated"))
             .read().collect()}
     assert have == want and any(t[1] is None for t in have)
-
-
-@pytest.mark.slow  # multi-minute pipeline e2e: close-out tier (pytest.ini)
-def test_curation_sink_streams_full_funnel(spark, tmp_path):
-    """The streaming front door accepts the same funnel configuration
-    as batch: a rebuild seeds frozen decon/ppl artifacts, then a
-    streamed delta batch screens against them — a planted
-    contaminated doc never reaches the curated table."""
-    from data_engineering_pipeline_spark.streaming.sinks import (
-        curation_sink,
-    )
-
-    wd = str(tmp_path / "wd")
-    kw = dict(alpha=1.0, ppl_gate=(500_000, 250_000))
-    curate_batch(
-        spark, _mk_docs(spark, _corpus(0, 60)), wd,
-        decontaminate=_eval_set(spark), **kw,
-    )
-
-    land = tmp_path / "in"
-    land.mkdir()
-    # clean ids chosen to PASS the frozen ppl gate's tail rate (all
-    # their bigrams are OOV to the frozen LM -> tail bucket keeps
-    # 25% by the salted hash; 705/707/712 pass, deterministic)
-    batch = [_contaminated_doc(970)] + [
-        _doc(705, "en",
-             "basalt columns cool slowly forming hexagonal jointing "
-             "patterns across volcanic plateaus"),
-        _doc(707, "en",
-             "quartz veins thread metamorphic host rock carrying "
-             "hydrothermal mineral deposits underground"),
-        _doc(712, "en",
-             "gneiss banding records repeated deformation cycles under "
-             "amphibolite facies conditions deep below"),
-    ]
-    _mk_docs(spark, batch).coalesce(1).write.parquet(str(land / "b0"))
-    schema = "doc_id long, lang string, text string"
-    stream = spark.readStream.schema(schema).parquet(str(land / "b0"))
-    curation_sink(
-        stream, wd, str(tmp_path / "ck"), mode="delta",
-        decontaminate=True, **kw,
-    ).awaitTermination()
-
-    cur = SnapshotTable(spark, os.path.join(wd, "curated"))
-    ids = {r.doc_id for r in cur.read().select("doc_id").collect()}
-    assert 970 not in ids  # screened against the FROZEN eval filter
-    assert {705, 707, 712} <= ids  # clean streamed docs landed
 
 
 def test_decon_refreeze_is_staged_and_atomic(spark, tmp_path):

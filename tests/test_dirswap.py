@@ -138,23 +138,6 @@ def _upsert_write(spark, root, batch):
     upsert_parquet(spark, os.path.join(root, "t"), batch, ["k"], "ver")
 
 
-# -- upsert_parquet, 2 touched partitions and 1 untouched -------------
-def _pupsert_setup(spark, root):
-    base = spark.createDataFrame(
-        [(1, "de", "a", 1), (2, "en", "b", 1), (3, "fr", "c", 1)], ROWS
-    )
-    upsert_parquet(spark, os.path.join(root, "t"), base, ["k"], "ver",
-                   ["lang"])
-    return spark.createDataFrame(
-        [(1, "de", "a2", 2), (4, "en", "d", 1)], ROWS
-    ), ("lang=fr",)
-
-
-def _pupsert_write(spark, root, batch):
-    upsert_parquet(spark, os.path.join(root, "t"), batch, ["k"], "ver",
-                   ["lang"])
-
-
 def _table_state(spark, root):
     return _rows(spark, os.path.join(root, "t"))
 
@@ -256,11 +239,8 @@ def _decon_state(spark, root):
 
 CASES = [
     Case("upsert", _upsert_setup, _upsert_write, _table_state),
-    Case("upsert-partitioned", _pupsert_setup, _pupsert_write,
-         _table_state),
-    pytest.param(Case("shards-incremental", _shards_setup, _shards_write,
-                      _shards_state, _fresh_shards(4)),
-                 marks=pytest.mark.slow),
+    Case("shards-incremental", _shards_setup, _shards_write,
+         _shards_state, _fresh_shards(4)),
     pytest.param(Case("shards-rebuild", _rebuild_setup, _rebuild_write,
                       _shards_state, _fresh_shards(3)),
                  marks=pytest.mark.slow),
@@ -271,7 +251,9 @@ CASES = [
 ]
 
 
-# the two upsert sweeps are tier-1; the rest are close-out tier
+# the whole-table upsert and the multi-unit incremental shard refresh
+# (swapped, dropped and untouched units) are tier-1; the rest are
+# close-out tier
 @pytest.mark.parametrize("case", CASES, ids=lambda c: c.name)
 def test_crash_at_every_swap_step_converges(
     spark, tmp_path, monkeypatch, case

@@ -1,6 +1,5 @@
-"""Observation-based metrics: values must match direct computation,
-cost nothing extra (no second scan), and surface in streaming
-progress."""
+"""Observation-based metrics: values must match direct computation
+and cost nothing extra (no second scan)."""
 
 from __future__ import annotations
 
@@ -38,38 +37,6 @@ def test_observed_metrics_single_scan(spark, sf_smoke):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
     assert "CollectMetrics" in plan
-
-
-def test_streaming_observed_metrics(spark, sf_smoke, tmp_path):
-    import shutil
-
-    from data_engineering_pipeline_spark.streaming.events import (
-        read_events_stream,
-    )
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(f"{sf_smoke}/events.parquet", d / "p.parquet")
-    stream = read_events_stream(spark, str(d))
-    stream = stream.observe(
-        "batch_audit",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).alias(
-            "n_null_value"
-        ),
-    )
-    q = (
-        stream.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [p for p in q.recentProgress if p["observedMetrics"]]
-    total = sum(
-        p["observedMetrics"]["batch_audit"]["n_rows"] for p in progresses
-    )
-    batch_rows = load_table(spark, sf_smoke, "events").count()
-    assert total == batch_rows
 
 
 def test_empty_batch_metrics_are_zero_not_null(spark):

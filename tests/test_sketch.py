@@ -273,27 +273,6 @@ def test_qsketch_brackets_exact_order_statistics(spark):
             assert r.lo == r.hi == r.est == exact
 
 
-def test_qsketch_merge_equals_sketch_of_union(spark):
-    from data_engineering_pipeline_spark.operators.sketch import (
-        qsketch_build,
-        qsketch_merge,
-    )
-
-    a = spark.createDataFrame(
-        [("g", i * 17 % 9973) for i in range(2000)], "g string, x long"
-    )
-    b = spark.createDataFrame(
-        [("g", i * 31 % 9973) for i in range(1500)], "g string, x long"
-    )
-    merged = qsketch_merge(
-        qsketch_build(a, "g", F.col("x")), qsketch_build(b, "g", F.col("x"))
-    )
-    direct = qsketch_build(a.unionByName(b), "g", F.col("x"))
-    assert {tuple(r) for r in merged.collect()} == {
-        tuple(r) for r in direct.collect()
-    }
-
-
 def test_qsketch_deterministic_under_repartition(spark):
     from data_engineering_pipeline_spark.operators.sketch import (
         qsketch_build,

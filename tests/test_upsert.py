@@ -62,137 +62,20 @@ def test_merge_prefers_new_on_equal_version(spark):
     assert merged[0].value == 2.0
 
 
-def test_partitioned_upsert_prunes_and_stays_idempotent(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    path = os.path.join(tmp_path, "raw_part")
-    batch = _df(
-        spark,
-        [("ZAF", 2015, 1.2, 100), ("ZAF", 2016, 2.2, 100), ("KEN", 2015, 3.4, 100)],
-    )
-    upsert_parquet(
-        spark, path, batch, ["country_iso3", "year"], "fetched_at",
-        partition_cols=["year"],
-    )
-    upsert_parquet(
-        spark, path, batch, ["country_iso3", "year"], "fetched_at",
-        partition_cols=["year"],
-    )
-    df = spark.read.parquet(path)
-    assert df.count() == 3
-    scan = df.filter(F.col("year") == 2015)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert scan.count() == 2
-
-
-def test_scoped_upsert_leaves_no_remnants(spark, tmp_path):
-    """A successful scoped upsert cleans up its staging and aside dirs."""
-    import glob
-
-    path = str(tmp_path / "clean")
-    base = spark.createDataFrame(
-        [(1, "de", "a", 1), (3, "en", "c", 1)],
-        "k long, lang string, v string, ver long",
-    )
-    upsert_parquet(spark, path, base, ["k"], "ver", ["lang"])
-    batch = spark.createDataFrame(
-        [(1, "de", "a2", 2)], "k long, lang string, v string, ver long"
-    )
-    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
-    assert not glob.glob(f"{path}.*")
-
-
-def test_scoped_upsert_touches_only_batch_partitions(spark, tmp_path):
-    """Partition-scoped upsert rewrites only the partitions present in
-    the batch: untouched partitions keep their exact files on disk, the
-    merge is idempotent, and the pruned read shows PartitionFilters."""
-    import glob
-    import os
-
-    path = str(tmp_path / "scoped")
-    base = spark.createDataFrame(
-        [(1, "de", "a", 1), (2, "de", "b", 1), (3, "en", "c", 1)],
-        "k long, lang string, v string, ver long",
-    )
-    upsert_parquet(spark, path, base, ["k"], "ver", ["lang"])
-    en_files_before = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/*.parquet")
-    }
-    assert en_files_before
-
-    batch = spark.createDataFrame(
-        [(1, "de", "a2", 2), (4, "de", "d", 1)],
-        "k long, lang string, v string, ver long",
-    )
-    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
-    # untouched partition: identical files, untouched mtimes
-    en_files_after = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/lang=en/*.parquet")
-    }
-    assert en_files_after == en_files_before
-
-    rows = {
-        r.k: (r.lang, r.v, r.ver)
-        for r in spark.read.parquet(path).collect()
-    }
-    assert rows == {
-        1: ("de", "a2", 2),
-        2: ("de", "b", 1),
-        3: ("en", "c", 1),
-        4: ("de", "d", 1),
-    }
-    # idempotent: replaying the batch changes nothing
-    upsert_parquet(spark, path, batch, ["k"], "ver", ["lang"])
-    assert {
-        r.k: (r.lang, r.v, r.ver)
-        for r in spark.read.parquet(path).collect()
-    } == rows
-
-
-def test_scoped_bootstrap_stages_and_empty_batch(spark, tmp_path):
-    """The scoped upsert's bootstrap must stage (a crash mid-write to
-    the live path would wedge the table unreadably), and an empty
-    batch must no-op instead of raising on a None predicate."""
-    import os
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, 1, "en"), (2, 1, "de")], "k long, ver long, lang string"
-    )
-    n = upsert_parquet(spark, path, df, ["k"], "ver", ["lang"])
-    assert n == 2 and os.listdir(tmp_path) == ["t"]  # staging cleaned up
-    empty = df.limit(0)
-    assert upsert_parquet(
-        spark, path, empty, ["k"], "ver", ["lang"]
-    ) == 0
-    assert spark.read.parquet(path).count() == 2
-
-
 def test_upsert_parquet_empty_new_fresh_table(spark, tmp_path):
-    """Empty new + no existing table: the partitioned empty write has
-    no data files; the count must come back 0, not raise on schema
-    inference."""
-    from data_engineering_pipeline_spark.operators.upsert import (
-        upsert_parquet,
-    )
-
+    """Empty new + no existing table: the count must come back 0, not
+    raise on schema inference."""
     path = str(tmp_path / "t")
     empty = spark.createDataFrame(
         [], "k long, ver long, lang string"
     )
-    assert upsert_parquet(
-        spark, path, empty, ["k"], "ver", ["lang"]
-    ) == 0
+    assert upsert_parquet(spark, path, empty, ["k"], "ver") == 0
 
 
 def test_returned_count_is_a_fresh_read_of_what_was_written(spark, tmp_path):
     """The count comes from an Observation on the staged write, not a
-    re-read: it must equal a fresh read of the table (whole-table), of
-    the same table after a replay, and of the touched partitions
-    (partition-scoped)."""
+    re-read: it must equal a fresh read of the table, and of the same
+    table after a replay."""
     keys = ["country_iso3", "year"]
     path = str(tmp_path / "whole")
     upsert_parquet(spark, path, _df(spark, [
@@ -203,19 +86,6 @@ def test_returned_count_is_a_fresh_read_of_what_was_written(spark, tmp_path):
     assert n == spark.read.parquet(path).count() == 3
     n = upsert_parquet(spark, path, batch, keys, "fetched_at")
     assert n == spark.read.parquet(path).count() == 3
-
-    scoped = str(tmp_path / "scoped")
-    upsert_parquet(spark, scoped, spark.createDataFrame(
-        [(1, "de", 1), (2, "de", 1), (3, "en", 1), (4, "fr", 1)],
-        "k long, lang string, ver long",
-    ), ["k"], "ver", ["lang"])
-    n = upsert_parquet(spark, scoped, spark.createDataFrame(
-        [(1, "de", 2), (5, "de", 1), (6, "en", 1)],
-        "k long, lang string, ver long",
-    ), ["k"], "ver", ["lang"])
-    touched = spark.read.parquet(scoped).filter(F.col("lang").isin("de", "en"))
-    assert n == touched.count() == 5
-    assert spark.read.parquet(scoped).count() == 6
 
 
 def test_empty_merge_counts_zero_without_blocking(spark, tmp_path):
